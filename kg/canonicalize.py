@@ -366,7 +366,9 @@ def canonical_map_from_corpus(
 
 
 def canonicalize_triples(triples_linked: DataFrame, canon: DataFrame) -> DataFrame:
-    """Re-map provisional entity ids to canonical component ids."""
+    """Re-map provisional entity ids to canonical component ids (stage 3
+    alone: the reference chain that kg.link.link_canonicalize_triples,
+    the pipeline's single stage-2+3 pass, is tested against)."""
     ent_map = F.broadcast(
         canon.select(
             id64(F.concat(F.lit("ent:"), F.col("surface"))).alias("_from"),

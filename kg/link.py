@@ -1,14 +1,19 @@
-"""Stage 2 — entity linking: broadcast alias-dictionary join + salted join.
+"""Stage 2+3 — entity linking composed with canonicalization, + salted join.
 
-Mention surfaces resolve through a broadcast alias dictionary (one hop of
-kg.vocab.ALIAS_EDGES); unresolved surfaces get a deterministic provisional
-entity (``ent:<surface>``). Media triples link subject->document node and
-object->media node directly (no dictionary needed).
+:func:`link_canonicalize_triples` is the one stage-2+3 pass (batch
+pipeline, staged resume, streaming micro-batches, graph queries): each
+mention surface resolves straight to its canonical entity — through the
+alias dictionary (one hop of kg.vocab.ALIAS_EDGES) composed with the
+dictionary canonical map, or through a corpus canonical map; unresolved
+surfaces get a deterministic provisional entity (``ent:<surface>``).
+Media triples link subject->document node and object->media node
+directly (no dictionary needed). :func:`link_triples` (stage 2 alone)
+serves the ``kg_linked`` contract query and the tests' reference chain.
 
-Skew: a head entity ("the" of entities) makes the linking join's build/
-probe hot on one key. Two defenses, both here:
-* ``F.broadcast`` on the dictionary (no shuffle of the big side at all) —
-  the default, because alias dictionaries are small relative to mentions;
+Skew: a head entity ("the" of entities) makes a linking join's build/
+probe hot on one key. Defenses:
+* no shuffle of the big side at all — the dictionary folds into a literal
+  map expression, and a corpus canonical map is broadcast;
 * :func:`salted_join` for the case where the right side is too big to
   broadcast — explodes the small side xK salts and sprays the hot keys of
   the big side across K partitions. AQE skew-join stays enabled as the
@@ -20,8 +25,6 @@ surface" operation — re-expressed as joins (SURVEY §2.6 J2).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +53,7 @@ def alias_dict(spark: SparkSession) -> DataFrame:
     return df
 
 
-def _composed_link_rows(max_component: int | None = 1000) -> list[tuple[str, int]]:
+def _composed_link_rows() -> list[tuple[str, int]]:
     """(surface, final_id) — the alias-dictionary hop COMPOSED with the
     canonical-map remap, computed driver-side over the two static tables.
 
@@ -61,15 +64,13 @@ def _composed_link_rows(max_component: int | None = 1000) -> list[tuple[str, int
     surface outside the dictionary falls back to id64('ent:'+s), which
     is never an ent_map key (ent_map keys cover exactly the dictionary
     surfaces). So the composition is a pure function of the two static
-    dictionaries and collapses stage 2+3 into ONE broadcast map —
-    asserted equal to the two-stage chain in tests/test_link.py.
+    dictionaries and collapses stage 2+3 into ONE map — asserted equal
+    to the two-stage chain in tests/test_link.py.
     """
     from kg.canonicalize import _canonical_map_rows
     from kg.ids import py_id64
 
-    ent_map = {
-        py_id64("ent:" + s): cid for s, cid, _ in _canonical_map_rows(max_component)
-    }
+    ent_map = {py_id64("ent:" + s): cid for s, cid, _ in _canonical_map_rows(1000)}
     rows = []
     for s, t in alias_pairs():
         tid = py_id64("ent:" + t)
@@ -77,62 +78,28 @@ def _composed_link_rows(max_component: int | None = 1000) -> list[tuple[str, int
     return sorted(rows)
 
 
-def composed_link_map(
-    spark: SparkSession, max_component: int | None = 1000
-) -> DataFrame:
-    """(surface, final_id) broadcast map = canonicalize ∘ link (see
-    :func:`_composed_link_rows`). Memoized per session like
-    :func:`alias_dict`."""
-    cache = getattr(spark, "_kg_composed_map_df", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._kg_composed_map_df = cache
-        except AttributeError:
-            pass
-    if max_component not in cache:
-        cache[max_component] = spark.createDataFrame(
-            _composed_link_rows(max_component), "surface string, final_id long"
-        )
-    return cache[max_component]
+def composed_link_expr() -> Column:
+    """The composed surface->canonical_id map as a LITERAL map Column.
 
-
-def literal_map_max() -> int:
-    """Size bound for folding a static map into a literal expression.
-
-    ``GetMapValue`` on a (constant-folded) map literal is a linear scan
-    per row, so this path only pays off while the dictionary is genuinely
-    config-sized; past the bound the broadcast hash join wins and the
-    callers fall back to it. Env ``KG_LITERAL_MAP_MAX`` overrides (0
-    disables the literal path entirely — used by tests to pin
-    path-equivalence)."""
-    return int(os.environ.get("KG_LITERAL_MAP_MAX", "256"))
-
-
-def composed_link_expr(max_component: int | None = 1000) -> Column | None:
-    """The composed surface->canonical_id map as a LITERAL map Column —
-    or None when the dictionary exceeds :func:`literal_map_max`.
-
-    The map is static vocabulary config (19 entries), so the lookup can
-    be a constant-folded expression in the same codegen stage as the
+    The map is static vocabulary config (19 entries), so the lookup is a
+    constant-folded expression in the same codegen stage as the
     extraction output: no broadcast exchange, no join operator, no
     per-query broadcast-build latency (guide §3 — broadcast the side
-    that fits; a side that is literal config folds away entirely)."""
-    rows = _composed_link_rows(max_component)
-    if len(rows) > literal_map_max():
-        return None
-    return F.create_map(
-        *[part for s, fid in rows for part in (F.lit(s), F.lit(fid))]
-    )
+    that fits; a side that is literal config folds away entirely).
+    Keys are unique (alias_pairs() iterates a set of surfaces). Misses
+    read as null, which needs Spark >= 3.4 under ANSI mode (older
+    versions raise MAP_KEY_DOES_NOT_EXIST)."""
+    rows = _composed_link_rows()
+    return F.create_map(*[part for s, fid in rows for part in (F.lit(s), F.lit(fid))])
 
 
 def _finalize_linked(
     triples_surface: DataFrame, subj_fid: Column, obj_fid: Column
 ) -> DataFrame:
-    """Shared output projection of stage 2+3: ``subj_fid``/``obj_fid``
-    are the dictionary-lookup columns (a joined ``_*_fid`` column or a
-    literal-map ``GetMapValue``), null when the surface is out of
-    dictionary — the fallback/media branches are identical either way."""
+    """Shared output projection of stage 2 (+3): ``subj_fid``/``obj_fid``
+    are the lookup columns (a joined ``_*_fid`` column or a literal-map
+    ``GetMapValue``), null when the surface is out of dictionary — the
+    fallback/media branches are identical either way."""
     is_mention = F.col("subj_pos") >= 0
     return triples_surface.select(
         "doc_id",
@@ -163,46 +130,23 @@ def _finalize_linked(
     )
 
 
-def link_canonicalize_triples(
-    triples_surface: DataFrame,
-    spark: SparkSession,
-    max_component: int | None = 1000,
-) -> DataFrame:
-    """Stage 2+3 in ONE pass for dictionary mode: TRIPLES_SURFACE ->
-    canonical TRIPLES via the composed surface->canonical_id map.
+def _link_via(triples_surface: DataFrame, lookup: DataFrame) -> DataFrame:
+    """Resolve both mention sides through a ``(surface, id)`` frame: one
+    broadcast left join per side, then the shared projection.
 
-    r06: when the composed map fits :func:`literal_map_max` (the
-    19-entry vocabulary always does) it is folded into a LITERAL map
-    expression — zero joins, zero broadcast exchanges, the whole linking
-    step is a projection in the extraction stage (measured: flagship
-    2.6 s -> 1.0 s, the per-query cost was broadcast creation + join
-    stage dispatch, not the probe itself). A dictionary past the bound
-    falls back to the two broadcast joins (instead of four: link joined
-    each mention side against the alias dict, then canonicalize joined
-    each side again — guide §2.4, remove shuffles/exchanges outright).
-    Output-identical to
-    ``canonicalize_triples(link_triples(t, alias_dict(spark)), canonical_map(spark))``
-    — asserted in tests/test_link.py (both paths) and by every
-    consumer's oracle."""
-    m_expr = composed_link_expr(max_component)
-    if m_expr is not None:
-        return _finalize_linked(
-            triples_surface,
-            m_expr[F.col("subj_surface")],
-            m_expr[F.col("obj_surface")],
-        )
-    m = F.broadcast(composed_link_map(spark, max_component))
+    Single scan, branch-free: a mention/media filter-and-union would
+    execute the (possibly expensive) upstream extraction twice. Media
+    rows (subj_pos < 0) simply never match and take the CASE branch."""
+    b = F.broadcast(lookup.toDF("surface", "_fid"))
     joined = triples_surface.join(
-        m.select(
-            F.col("surface").alias("subj_surface"),
-            F.col("final_id").alias("_subj_fid"),
+        b.select(
+            F.col("surface").alias("subj_surface"), F.col("_fid").alias("_subj_fid")
         ),
         "subj_surface",
         "left",
     ).join(
-        m.select(
-            F.col("surface").alias("obj_surface"),
-            F.col("final_id").alias("_obj_fid"),
+        b.select(
+            F.col("surface").alias("obj_surface"), F.col("_fid").alias("_obj_fid")
         ),
         "obj_surface",
         "left",
@@ -210,128 +154,40 @@ def link_canonicalize_triples(
     return _finalize_linked(joined, F.col("_subj_fid"), F.col("_obj_fid"))
 
 
-def empty_alias_dict(spark: SparkSession) -> DataFrame:
-    """No-dictionary linking (corpus-canonicalization mode): every mention
-    takes :func:`link_triples`'s raw-surface fallback id, and stage 3's
-    corpus-similarity connected components does ALL the aliasing."""
-    return spark.createDataFrame(
-        [], "surface string, target string, target_id long"
-    )
+def link_canonicalize_triples(
+    triples_surface: DataFrame,
+    spark: SparkSession,
+    canon: DataFrame | None = None,
+) -> DataFrame:
+    """Stage 2+3 in ONE pass: TRIPLES_SURFACE -> canonical TRIPLES.
+
+    ``canon=None`` (dictionary mode): the composed surface->canonical_id
+    map folded into a literal map expression (:func:`composed_link_expr`)
+    — zero joins, zero broadcast exchanges, the whole linking step is a
+    projection in the extraction stage. Output-identical to
+    ``canonicalize_triples(link_triples(t, alias_dict(spark)), canonical_map(spark))``.
+
+    ``canon`` = a corpus canonical map (``surface, canonical_id, ...``,
+    one row per surface — kg.canonicalize.canonical_map_from_corpus):
+    there is no alias dictionary, so every mention's provisional id is
+    its raw surface's and the canonical map is keyed on that surface —
+    one broadcast lookup per mention side. Output-identical to
+    ``canonicalize_triples(link_triples(t, <empty alias frame>), canon)``.
+
+    Both equivalences are asserted in tests/test_link.py."""
+    if canon is None:
+        m = composed_link_expr()
+        return _finalize_linked(
+            triples_surface, m[F.col("subj_surface")], m[F.col("obj_surface")]
+        )
+    return _link_via(triples_surface, canon.select("surface", "canonical_id"))
 
 
 def link_triples(triples_surface: DataFrame, aliases: DataFrame) -> DataFrame:
-    """TRIPLES_SURFACE -> TRIPLES_LINKED via broadcast dictionary joins.
-
-    Single scan, branch-free: a mention/media filter-and-union would
-    execute the (possibly expensive) upstream extraction twice. Media
-    rows (subj_pos < 0) simply never match the dictionary and take the
-    CASE branch instead.
-    """
-    b = F.broadcast(aliases)
-    is_mention = F.col("subj_pos") >= 0
-    return (
-        triples_surface.join(
-            b.select(
-                F.col("surface").alias("subj_surface"),
-                F.col("target_id").alias("_subj_id"),
-            ),
-            "subj_surface",
-            "left",
-        )
-        .join(
-            b.select(
-                F.col("surface").alias("obj_surface"),
-                F.col("target_id").alias("_obj_id"),
-            ),
-            "obj_surface",
-            "left",
-        )
-        .select(
-            "doc_id",
-            "offset",
-            F.when(
-                is_mention,
-                F.coalesce(
-                    "_subj_id", id64(F.concat(F.lit("ent:"), F.col("subj_surface")))
-                ),
-            )
-            .otherwise(id64(F.concat(F.lit("doc:"), F.col("doc_id"))))
-            .alias("subj_id"),
-            F.when(is_mention, F.lit(ENTITY_KIND))
-            .otherwise(F.lit("document"))
-            .alias("subj_kind"),
-            "pred",
-            F.when(
-                is_mention,
-                F.coalesce(
-                    "_obj_id", id64(F.concat(F.lit("ent:"), F.col("obj_surface")))
-                ),
-            )
-            .otherwise(id64(F.col("obj_surface")))
-            .alias("obj_id"),
-            F.when(is_mention, F.lit(ENTITY_KIND))
-            .otherwise(F.lit("media"))
-            .alias("obj_kind"),
-        )
-    )
-
-
-def link_triples_salted(
-    triples_surface: DataFrame, aliases: DataFrame, n_salts: int = 16
-) -> DataFrame:
-    """Stage-2 variant for when the entity catalog is too large to
-    broadcast: salted hash joins on both mention sides. Head-entity skew
-    ("the most-mentioned entity hashes all its rows into one task") is
-    defused because every big-side row is salted across ``n_salts``
-    reducers (see :func:`salted_join`). Result-identical to
-    :func:`link_triples` — asserted in tests.
-    """
-    is_mention = F.col("subj_pos") >= 0
-    s = salted_join(
-        triples_surface,
-        aliases.select(
-            F.col("surface").alias("subj_surface"),
-            F.col("target_id").alias("_subj_id"),
-        ),
-        "subj_surface",
-        n_salts=n_salts,
-    )
-    so = salted_join(
-        s,
-        aliases.select(
-            F.col("surface").alias("obj_surface"),
-            F.col("target_id").alias("_obj_id"),
-        ),
-        "obj_surface",
-        n_salts=n_salts,
-    )
-    return so.select(
-        "doc_id",
-        "offset",
-        F.when(
-            is_mention,
-            F.coalesce(
-                "_subj_id", id64(F.concat(F.lit("ent:"), F.col("subj_surface")))
-            ),
-        )
-        .otherwise(id64(F.concat(F.lit("doc:"), F.col("doc_id"))))
-        .alias("subj_id"),
-        F.when(is_mention, F.lit(ENTITY_KIND))
-        .otherwise(F.lit("document"))
-        .alias("subj_kind"),
-        "pred",
-        F.when(
-            is_mention,
-            F.coalesce(
-                "_obj_id", id64(F.concat(F.lit("ent:"), F.col("obj_surface")))
-            ),
-        )
-        .otherwise(id64(F.col("obj_surface")))
-        .alias("obj_id"),
-        F.when(is_mention, F.lit(ENTITY_KIND))
-        .otherwise(F.lit("media"))
-        .alias("obj_kind"),
-    )
+    """TRIPLES_SURFACE -> TRIPLES_LINKED (stage 2 alone, uncanonicalized)
+    via broadcast dictionary joins — the ``kg_linked`` contract query and
+    the tests' reference for :func:`link_canonicalize_triples`."""
+    return _link_via(triples_surface, aliases.select("surface", "target_id"))
 
 
 def salted_join(

@@ -219,59 +219,6 @@ def materialize_edges(
     )
 
 
-def build_nodes(
-    triples_surface: DataFrame, canon: DataFrame, edges_final: DataFrame
-) -> DataFrame:
-    """NODES table: concept nodes from the canonical map, document/media
-    nodes from surface triples, mention counts from final edges."""
-    concepts = canon.select(
-        F.col("canonical_id").alias("entity_id"),
-        F.col("canonical_name").alias("name"),
-        F.lit("concept").alias("kind"),
-    ).distinct()
-    # doc + media nodes in ONE pass over the media rows (a docs/media
-    # union of two selects re-derives the whole extraction subtree twice)
-    media_rows = triples_surface.filter(F.col("subj_pos") < 0)
-    doc_media = (
-        media_rows.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        id64(F.concat(F.lit("doc:"), F.col("doc_id"))).alias(
-                            "entity_id"
-                        ),
-                        F.col("doc_id").alias("name"),
-                        F.lit("document").alias("kind"),
-                    ),
-                    F.struct(
-                        id64(F.col("obj_surface")).alias("entity_id"),
-                        F.col("obj_surface").alias("name"),
-                        F.lit("media").alias("kind"),
-                    ),
-                )
-            ).alias("n")
-        )
-        .select("n.entity_id", "n.name", "n.kind")
-        .distinct()
-    )
-    all_nodes = concepts.unionByName(doc_media)
-    # single-pass endpoint explode (a union of two selects over the same
-    # plan would recompute the whole upstream DAG twice when uncached)
-    mentions = (
-        edges_final.select(
-            F.explode(F.array("subj_id", "obj_id")).alias("entity_id")
-        )
-        .groupBy("entity_id")
-        .agg(F.count("*").alias("n_mentions"))
-    )
-    return all_nodes.join(mentions, "entity_id", "left").select(
-        "entity_id",
-        "name",
-        "kind",
-        F.coalesce("n_mentions", F.lit(0)).cast("long").alias("n_mentions"),
-    )
-
-
 def build_nodes_from_edges(
     canon: DataFrame,
     edges_final: DataFrame,
@@ -283,7 +230,7 @@ def build_nodes_from_edges(
     Works because media edges carry everything needed to reconstruct the
     node names: ``pred = 'has_<kind>'``, ``doc_id = 'doc-%07d' % n`` and
     ``media_ref = 'media://<kind>/<n>-<offset>'`` (kg.synth derivation
-    contract). Equality with :func:`build_nodes` is asserted in tests.
+    contract). Equality with the DuckDB nodes oracle is asserted in tests.
 
     ``concepts`` (r06): an already-distinct (entity_id, name, kind) frame
     — dictionary mode passes kg.canonicalize.canonical_concepts, which
@@ -300,8 +247,7 @@ def build_nodes_from_edges(
     doc_num = F.substring(F.col("doc_id"), 5, 20).cast("long")
     # doc + media nodes in ONE pass over the media rows (r06: the
     # docs/media two-select union scanned the edges table twice and paid
-    # two distinct exchanges; one explode + one distinct halves both —
-    # same single-pass shape build_nodes already uses)
+    # two distinct exchanges; one explode + one distinct halves both)
     doc_media = (
         media_edges.select(
             F.explode(

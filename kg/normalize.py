@@ -14,13 +14,10 @@ Reference analog: the per-record cleaning stage
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kg.cleaning import clean_text_col, clean_text_pandas
+from kg.cleaning import clean_text_col
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -34,25 +31,14 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def normalize_spans(docs: DataFrame, use_pandas: bool = False) -> DataFrame:
-    """Stage 0: explode + normalize text spans (native or Arrow path)."""
-    flat = explode_spans(docs)
-    if not use_pandas:
-        return flat.withColumn(
-            "text",
-            F.when(F.col("kind") == "text", clean_text_col(F.col("text"))).otherwise(
-                F.col("text")
-            ),
-        )
-
-    def _norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mask = pdf["kind"] == "text"
-            if mask.any():
-                pdf.loc[mask, "text"] = clean_text_pandas(pdf.loc[mask, "text"])
-            yield pdf
-
-    return flat.mapInPandas(_norm, schema=flat.schema)
+def normalize_spans(docs: DataFrame) -> DataFrame:
+    """Stage 0: explode + normalize text spans (native expression chain)."""
+    return explode_spans(docs).withColumn(
+        "text",
+        F.when(F.col("kind") == "text", clean_text_col(F.col("text"))).otherwise(
+            F.col("text")
+        ),
+    )
 
 
 def reassemble_spans(spans_norm: DataFrame) -> DataFrame:

@@ -21,15 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg.canonicalize import (
+    canonical_concepts,
     canonical_map,
     canonical_map_from_corpus,
-    canonicalize_triples,
 )
-from kg.extract import extract_triples, extract_triples_pandas
+from kg.extract import extract_triples
 from kg.fused import fused_extract_triples
-from kg.link import alias_dict, empty_alias_dict, link_triples
+from kg.link import link_canonicalize_triples
 from kg.materialize import (
-    build_nodes,
     build_nodes_from_edges,
     materialize_edges,
     materialize_nodes,
@@ -41,44 +40,30 @@ from kg.session import get_spark
 from kg.synth import load_interleaved
 
 
-def _canon_for(
-    spark: SparkSession, triples_surface: DataFrame, canonicalize: str
+def _surface_triples(
+    spark: SparkSession, sf_dir: str, extractor: str, replicate: int
 ) -> DataFrame:
-    """Stage-3 canonical map: 'dict' = alias-dictionary closure (reference
-    parity, the P/R-gate mode); 'corpus' = connected components over the
-    corpus-derived surface-similarity graph (the north-star mode — no
-    curated dictionary needed)."""
-    if canonicalize == "corpus":
-        mentions = triples_surface.filter(F.col("subj_pos") >= 0)
-        surfaces = mentions.select(
-            F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
-        )
-        return canonical_map_from_corpus(
-            surfaces, max_distance=1, block_prefix=1, max_component=1000
-        )
-    return canonical_map(spark)
+    """Stage 0+1 producer: 'fused' = derive+normalize+extract in one
+    Arrow kernel (kg.fused — the at-scale path); 'sql' = the stagewise
+    native-expression path (oracle-parity reference)."""
+    if extractor == "fused":
+        return fused_extract_triples(spark, sf_dir, replicate=replicate)
+    if extractor == "sql":
+        docs = load_interleaved(spark, sf_dir, replicate=replicate)
+        return extract_triples(normalize_spans(docs))
+    raise ValueError(f"unknown extractor {extractor!r}")
 
 
-def build_edges(
-    docs: DataFrame,
-    spark: SparkSession,
-    extractor: str = "sql",
-    pandas_normalize: bool = False,
-    canonicalize: str = "dict",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Logical plan through stage 3. Returns (triples_surface, canon, edges)."""
-    spans = normalize_spans(docs, use_pandas=pandas_normalize)
-    if extractor == "pandas":
-        triples_surface = extract_triples_pandas(spans)
-    else:
-        triples_surface = extract_triples(spans)
-    aliases = (
-        alias_dict(spark) if canonicalize == "dict" else empty_alias_dict(spark)
+def _corpus_canon(triples_surface: DataFrame) -> DataFrame:
+    """Dictionary-free stage-3 map: connected components over the
+    corpus-derived surface-similarity graph of the mention surfaces."""
+    mentions = triples_surface.filter(F.col("subj_pos") >= 0)
+    surfaces = mentions.select(
+        F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
     )
-    linked = link_triples(triples_surface, aliases)
-    canon = _canon_for(spark, triples_surface, canonicalize)
-    final = canonicalize_triples(linked, canon)
-    return triples_surface, canon, final
+    return canonical_map_from_corpus(
+        surfaces, max_distance=1, block_prefix=1, max_component=1000
+    )
 
 
 def run_pipeline(
@@ -87,7 +72,6 @@ def run_pipeline(
     out_dir: str,
     *,
     extractor: str = "fused",
-    pandas_normalize: bool = False,
     canonicalize: str = "dict",
     run_id: str | None = None,
     n_buckets: int = 64,
@@ -115,7 +99,9 @@ def run_pipeline(
         if timing:
             print(f"[timing] {label} +{time.time() - t0:.1f}s", file=sys.stderr)
 
-    def _stage_ckpt(df: DataFrame, name: str, sort_cols: list[str]) -> DataFrame:
+    def _stage_ckpt(
+        df: DataFrame, name: str, sort_cols: list[str], stage_lineage: str = lineage
+    ) -> DataFrame:
         """Optional per-stage checkpoint (north rule: every stage commits
         per-partition progress with lineage + counters): write the stage
         output in resumable partition groups, then read it back so
@@ -128,7 +114,7 @@ def run_pipeline(
             out_dir,
             name,
             run_id=run_id,
-            lineage=lineage,
+            lineage=stage_lineage,
             group_col=F.pmod(F.xxhash64("doc_id"), F.lit(n_groups)),
             n_groups=n_groups,
             sort_cols=sort_cols,
@@ -137,91 +123,54 @@ def run_pipeline(
         _mark(f"stage {name} committed")
         return spark.read.parquet(os.path.join(out_dir, name))
 
-    if extractor == "fused":
-        # Arrow fast path: derive+normalize+extract in one mapInPandas
-        # kernel (see kg.fused for why the stagewise JVM path can't scale)
-        triples_surface = fused_extract_triples(spark, sf_dir, replicate=replicate)
-        triples_surface = _stage_ckpt(
-            triples_surface, "stage_extract", ["doc_id", "offset", "subj_pos"]
+    triples_surface = _stage_ckpt(
+        _surface_triples(spark, sf_dir, extractor, replicate),
+        "stage_extract",
+        ["doc_id", "offset", "subj_pos"],
+    )
+    # 'dict' = alias-dictionary closure (reference parity, the P/R-gate
+    # mode; canon=None selects the composed literal map); 'corpus' =
+    # connected components over the corpus similarity graph
+    canon = _corpus_canon(triples_surface) if canonicalize == "corpus" else None
+    # NO .persist(): caching tens of millions of rows turns the JVM into
+    # a GC bottleneck that erases multi-core scaling (measured: extract
+    # 8s uncached vs 50s cached at local[32]). The written edges table
+    # itself is the reuse point for the nodes build.
+    final = _stage_ckpt(
+        link_canonicalize_triples(triples_surface, spark, canon=canon),
+        "stage_link",
+        ["doc_id", "offset", "subj_id"],
+        # stage_link once held the UNcanonicalized linked table: a
+        # distinct lineage keeps such commits from being resumed as
+        # canonical rows (they are swept and rewritten instead)
+        stage_lineage=lineage + ";link=canonical",
+    )
+    _mark("plan built")
+    n_edges_written = materialize_edges(
+        spark,
+        final.select("subj_id", "pred", "obj_id", "doc_id", "offset"),
+        out_dir,
+        run_id=run_id,
+        lineage=lineage,
+        n_buckets=n_buckets,
+        n_groups=n_groups,
+        fail_after_groups=fail_after_groups,
+    )
+    _mark("edges written")
+    # nodes come from the materialized edges table — reusing disk instead
+    # of recomputing the extraction DAG or caching it in-heap
+    edges_final = spark.read.parquet(f"{out_dir}/edges")
+    if canon is None:
+        nodes = build_nodes_from_edges(
+            canonical_map(spark), edges_final, concepts=canonical_concepts(spark)
         )
-        canon = _canon_for(spark, triples_surface, canonicalize)
-        if canonicalize == "dict" and not checkpoint_stages:
-            # stage 2+3 composed into ONE broadcast-map pass (the alias
-            # dict and canonical map are both static, so their composition
-            # is too — two broadcast joins instead of four; kg.link).
-            # checkpoint_stages keeps the two-stage path: stage_link's
-            # durable output is the UNcanonicalized linked table.
-            from kg.link import link_canonicalize_triples
-
-            final = link_canonicalize_triples(triples_surface, spark)
-        else:
-            aliases = (
-                alias_dict(spark)
-                if canonicalize == "dict"
-                else empty_alias_dict(spark)
-            )
-            linked = link_triples(triples_surface, aliases)
-            linked = _stage_ckpt(
-                linked, "stage_link", ["doc_id", "offset", "subj_id"]
-            )
-            final = canonicalize_triples(linked, canon)
-        # NO .persist(): caching tens of millions of rows turns the JVM
-        # into a GC bottleneck that erases multi-core scaling (measured:
-        # extract 8s uncached vs 50s cached at local[32]). The written
-        # edges table itself is the reuse point — node mention counts read
-        # it back from parquet; the cheap Arrow extraction recomputes for
-        # the media/doc node names.
-        persisted = []
     else:
-        docs = load_interleaved(spark, sf_dir, replicate=replicate)
-        triples_surface, canon, final = build_edges(
-            docs,
-            spark,
-            extractor=extractor,
-            pandas_normalize=pandas_normalize,
-            canonicalize=canonicalize,
-        )
-        # the stagewise JVM path is expensive to recompute; cache it (small
-        # SFs only — the fused path is the at-scale configuration)
-        triples_surface = triples_surface.persist()
-        final = final.persist()
-        persisted = [triples_surface, final]
-
-    try:
-        _mark("plan built")
-        n_edges_written = materialize_edges(
-            spark,
-            final.select("subj_id", "pred", "obj_id", "doc_id", "offset"),
-            out_dir,
-            run_id=run_id,
-            lineage=lineage,
-            n_buckets=n_buckets,
-            n_groups=n_groups,
-            fail_after_groups=fail_after_groups,
-        )
-        _mark("edges written")
-        # rebuild nodes from the materialized edges table — reusing disk
-        # instead of recomputing the extraction DAG or caching it in-heap
-        edges_final = spark.read.parquet(f"{out_dir}/edges")
-        if extractor == "fused":
-            concepts = None
-            if canonicalize == "dict":
-                from kg.canonicalize import canonical_concepts
-
-                concepts = canonical_concepts(spark)
-            nodes = build_nodes_from_edges(canon, edges_final, concepts=concepts)
-        else:
-            nodes = build_nodes(triples_surface, canon, edges_final)
-        n_nodes = materialize_nodes(
-            spark, nodes, out_dir, run_id=run_id, lineage=lineage
-        )
-        _mark("nodes written")
-        # footer metadata count — the table was just written and counted
-        # group-by-group; a distributed count job re-reads nothing new
-        n_edges_total = parquet_rows(f"{out_dir}/edges")
-    finally:
-        for df in persisted:
-            df.unpersist()
+        nodes = build_nodes_from_edges(canon, edges_final)
+    n_nodes = materialize_nodes(spark, nodes, out_dir, run_id=run_id, lineage=lineage)
+    _mark("nodes written")
+    # footer metadata count — the table was just written and counted
+    # group-by-group; a distributed count job re-reads nothing new
+    n_edges_total = parquet_rows(f"{out_dir}/edges")
 
     wall = time.time() - t0
     return {
@@ -241,11 +190,11 @@ def main() -> None:
     p.add_argument("--out", required=True)
     p.add_argument(
         "--extractor",
-        choices=["sql", "pandas", "fused"],
+        choices=["sql", "fused"],
         default="fused",
-        help="'fused' (default) = the at-scale Arrow kernel (3-4x faster than "
-        "the native-expression 'sql' path in a single JVM — see kg/fused.py); "
-        "'sql'/'pandas' stay for oracle parity and scripts/dev_compare.py",
+        help="stage-1 producer: 'fused' (default) = the at-scale Arrow kernel "
+        "(3-4x faster than the native-expression 'sql' path in a single JVM — "
+        "see kg/fused.py); 'sql' stays for oracle parity",
     )
     p.add_argument(
         "--canonicalize",
@@ -254,7 +203,6 @@ def main() -> None:
         help="stage-3 mode: alias-dictionary closure (reference parity) or "
         "connected components over the corpus-derived similarity graph",
     )
-    p.add_argument("--pandas-normalize", action="store_true")
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--n-groups", type=int, default=4)
@@ -287,7 +235,6 @@ def main() -> None:
             args.sf_dir,
             args.out,
             extractor=args.extractor,
-            pandas_normalize=args.pandas_normalize,
             canonicalize=args.canonicalize,
             run_id=args.run_id,
             n_buckets=args.n_buckets,

@@ -10,10 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg.canonicalize import canonical_map, canonicalize_triples
+from kg.canonicalize import canonical_concept_rows, canonical_concepts, canonical_map
 from kg.extract import extract_triples, extract_triples_pandas
-from kg.link import alias_dict, link_triples
-from kg.materialize import build_nodes, with_bucket
+from kg.link import alias_dict, link_canonicalize_triples, link_triples
+from kg.materialize import build_nodes_from_edges
 from kg.normalize import explode_spans, normalize_spans
 from kg.synth import load_interleaved
 
@@ -44,33 +44,17 @@ def q_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    canon = canonical_map(spark)
-    final = canonicalize_triples(q_linked(spark, sf_dir), canon)
+    final = link_canonicalize_triples(q_triples_surface(spark, sf_dir), spark)
     return final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
 
 
 def q_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    triples_surface = q_triples_surface(spark, sf_dir)
-    canon = canonical_map(spark)
-    final = canonicalize_triples(
-        link_triples(triples_surface, alias_dict(spark)), canon
+    return build_nodes_from_edges(
+        canonical_map(spark), q_edges(spark, sf_dir), concepts=canonical_concepts(spark)
     )
-    edges = with_bucket(
-        final.select("subj_id", "pred", "obj_id", "doc_id", "offset"), 16
-    )
-    return build_nodes(triples_surface, canon, edges)
 
 
-def _top_entities_from_edges(
-    spark: SparkSession, edges: DataFrame, limit: int
-) -> DataFrame:
-    # r06: (canonical_id, canonical_name) deduped driver-side — the map
-    # is static vocabulary, and the runtime .distinct() paid an Exchange
-    # stage per query for a dictionary-sized dedup (kg.canonicalize.
-    # canonical_concepts; equivalence pinned in tests)
-    from kg.canonicalize import canonical_concept_rows, canonical_concepts
-    from kg.link import literal_map_max
-
+def _top_entities_from_edges(edges: DataFrame, limit: int) -> DataFrame:
     # explode both endpoints in ONE pass — a subj/obj unionByName would
     # duplicate the entire upstream extraction DAG
     cnt = (
@@ -80,28 +64,17 @@ def _top_entities_from_edges(
         .groupBy("entity_id")
         .agg(F.count("*").alias("n_mentions"))
     )
-    name_rows = canonical_concept_rows()
-    if len(name_rows) <= literal_map_max():
-        # literal name map: the inner join against the 15-row concepts
-        # frame becomes a constant-folded lookup + null filter — no
-        # broadcast exchange, no join stage (same move as
-        # kg.link.composed_link_expr; equal keys are unique, so
-        # lookup-and-filter is exactly the unique-key inner join)
-        name_map = F.create_map(
-            *[part for cid, nm in name_rows for part in (F.lit(cid), F.lit(nm))]
-        )
-        named = cnt.select(
-            name_map[F.col("entity_id")].alias("name"), "n_mentions"
-        ).filter(F.col("name").isNotNull())
-    else:
-        canon_names = canonical_concepts(spark).select(
-            F.col("entity_id").alias("canonical_id"),
-            F.col("name").alias("canonical_name"),
-        )
-        named = cnt.join(
-            F.broadcast(canon_names),
-            cnt.entity_id == canon_names.canonical_id,
-        ).select(F.col("canonical_name").alias("name"), "n_mentions")
+    # literal name map over the static concept rows (deduped driver-side):
+    # the inner join against the concepts frame becomes a constant-folded
+    # lookup + null filter — no broadcast exchange, no join stage (same
+    # move as kg.link.composed_link_expr; equal keys are unique, so
+    # lookup-and-filter is exactly the unique-key inner join)
+    name_map = F.create_map(
+        *[part for cid, nm in canonical_concept_rows() for part in (F.lit(cid), F.lit(nm))]
+    )
+    named = cnt.select(
+        name_map[F.col("entity_id")].alias("name"), "n_mentions"
+    ).filter(F.col("name").isNotNull())
     return named.orderBy(F.desc("n_mentions"), F.asc("name")).limit(limit)
 
 
@@ -126,15 +99,13 @@ def q_top_entities_fused(
     configuration (kg/fused.py); same oracle as kg_top_entities (the two
     extraction paths are output-identical, asserted in tests/test_fused.py
     and by this query sharing kg_top_entities' oracle SQL). Stage 2+3 run
-    as the composed single-pass broadcast map (kg.link.link_canonicalize_
-    triples — two broadcast joins instead of four, output-identical)."""
+    as the composed single pass (kg.link.link_canonicalize_triples)."""
     from kg.fused import fused_extract_triples
-    from kg.link import link_canonicalize_triples
 
     triples = fused_extract_triples(spark, sf_dir)
     final = link_canonicalize_triples(triples, spark)
     return _top_entities_from_edges(
-        spark, final.select("subj_id", "pred", "obj_id", "doc_id", "offset"), limit
+        final.select("subj_id", "pred", "obj_id", "doc_id", "offset"), limit
     )
 
 

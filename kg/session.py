@@ -27,9 +27,10 @@ def spread_partitions(spark: SparkSession) -> int:
     cores: fused kernel 0.70 s at 64 tasks vs 0.41 s at 32; x64 tiling
     1.48 vs 1.31). Reads the core count get_spark stores in conf
     (``spark.kg.cores``); sessions not built by that factory fall back
-    to ``defaultParallelism``, which preserves the old behavior."""
-    v = spark.conf.get("spark.kg.cores", None)
-    if v:
+    to ``defaultParallelism``, as do values that are not a positive
+    integer (e.g. a mistyped spark-submit conf)."""
+    v = spark.conf.get("spark.kg.cores", None) or ""
+    if v.isdigit() and int(v) > 0:
         return int(v)
     return spark.sparkContext.defaultParallelism
 

@@ -74,24 +74,22 @@ def stream_kg_edges(
     fused extraction (mapInPandas on the stream) then linking +
     canonicalization + edges append inside ``foreachBatch``.
 
-    The join/canonicalize stages are the same batch plans (broadcast
-    dictionary, literal canonical map), so stream output == batch output
+    Linking + canonicalization is the batch pipeline's single pass
+    (kg.link.link_canonicalize_triples), so stream output == batch output
     on the same corpus (asserted in tests). Restarting with the same
     checkpoint skips committed micro-batches; the canonical map is
     session-stable (dictionary closure), so late batches canonicalize
     identically — the streaming analog of lineage-pinned resume.
     """
-    from kg.canonicalize import canonical_map, canonicalize_triples
     from kg.fused import _run_batches
-    from kg.link import alias_dict, link_triples
+    from kg.link import link_canonicalize_triples
     from kg.schemas import TRIPLES_SURFACE
 
     src = spark.readStream.schema(FLAT_DOCS).parquet(in_dir)
     triples = src.mapInPandas(_run_batches, schema=TRIPLES_SURFACE)
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        linked = link_triples(batch_df, alias_dict(spark))
-        final = canonicalize_triples(linked, canonical_map(spark))
+        final = link_canonicalize_triples(batch_df, spark)
         (
             final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
             .write.mode("append")

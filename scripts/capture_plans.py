@@ -38,6 +38,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from kg.fused import fused_extract_triples
+    from kg.link import link_canonicalize_triples
     from kg.materialize import with_bucket
     from kg.ops import dedup, relational, simsearch
     from kg.queries import q_top_entities, q_top_entities_fused
@@ -55,18 +56,7 @@ def main() -> None:
     # the pipeline's staged-write input plan (the shape materialize_
     # partitioned shuffles and writes), built exactly as run_pipeline
     # does for the fused default
-    tri = fused_extract_triples(spark, SF_DIR)
-    try:
-        from kg.link import link_canonicalize_triples
-
-        final = link_canonicalize_triples(tri, spark)
-    except ImportError:  # round-start tree: two-stage chain
-        from kg.canonicalize import canonical_map, canonicalize_triples
-        from kg.link import alias_dict, link_triples
-
-        final = canonicalize_triples(
-            link_triples(tri, alias_dict(spark)), canonical_map(spark)
-        )
+    final = link_canonicalize_triples(fused_extract_triples(spark, SF_DIR), spark)
     sel = final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
     bucketed = with_bucket(sel, 64).withColumn(
         "part_group", F.pmod(F.col("bucket"), F.lit(4)).cast("int")

@@ -1,7 +1,7 @@
 """Fused Arrow kernel: exact equality with the stagewise paths + oracle."""
 
 from kg.fused import fused_extract_triples
-from kg.oracles import triples_surface_sql
+from kg.oracles import nodes_sql, triples_surface_sql
 from kg.queries import q_triples_surface
 from tests.conftest import SF_DIR, assert_df_equal
 
@@ -16,19 +16,32 @@ def test_fused_matches_duckdb(spark, duck):
     assert_df_equal(fused_extract_triples(spark, SF_DIR), duck.sql(triples_surface_sql()))
 
 
-def test_fused_pipeline_resume_and_nodes(spark, tmp_path):
-    """Fused e2e writes the same edges as the sql-extractor e2e, and the
-    edges-derived nodes build equals the surface-derived one."""
+def test_fused_pipeline_resume_and_nodes(spark, duck, tmp_path):
+    """The fused e2e run's nodes table — rebuilt from the written edges —
+    equals the DuckDB nodes oracle (its edges are checked per extractor
+    by tests/test_pipeline.py::test_precision_recall_vs_oracle)."""
     from kg.pipeline import run_pipeline
 
-    out_a = str(tmp_path / "fused")
-    out_b = str(tmp_path / "sql")
-    run_pipeline(spark, SF_DIR, out_a, extractor="fused")
-    run_pipeline(spark, SF_DIR, out_b, extractor="sql")
-    for table in ("edges", "nodes"):
-        a = spark.read.parquet(f"{out_a}/{table}")
-        b = spark.read.parquet(f"{out_b}/{table}")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, table
+    out = str(tmp_path / "fused")
+    run_pipeline(spark, SF_DIR, out, extractor="fused")
+    assert_df_equal(spark.read.parquet(f"{out}/nodes"), duck.sql(nodes_sql()))
+
+
+def test_spread_partitions_ignores_bad_core_conf(spark):
+    """A spark.kg.cores that is not a positive integer (an external
+    spark-submit conf) falls back to defaultParallelism instead of
+    repartition(0) or a ValueError at plan build."""
+    from kg.session import spread_partitions
+
+    old = spark.conf.get("spark.kg.cores")
+    try:
+        for bad in ("0", "x"):
+            spark.conf.set("spark.kg.cores", bad)
+            assert spread_partitions(spark) == spark.sparkContext.defaultParallelism
+            assert fused_extract_triples(spark, SF_DIR).count() > 0
+    finally:
+        spark.conf.set("spark.kg.cores", old)
+    assert spread_partitions(spark) == int(old)
 
 
 def test_kernel_side_tiling_equals_crossjoin_tiling(spark):

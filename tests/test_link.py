@@ -1,4 +1,5 @@
-"""Linking: dictionary resolution + salted-join equivalence under skew."""
+"""Linking: dictionary resolution, the composed stage-2+3 pass against the
+two-stage reference chain, salted-join equivalence under skew."""
 
 from pyspark.sql import functions as F
 
@@ -105,7 +106,7 @@ def test_salted_join_defuses_hot_key_skew(spark):
 
 
 def test_link_canonicalize_composed_equals_two_stage(spark):
-    """r06 optimization: stages 2+3 composed into one broadcast-map pass
+    """Dictionary mode: stages 2+3 composed into one literal-map pass
     (kg.link.link_canonicalize_triples) must be row-identical to the
     two-stage chain link_triples -> canonicalize_triples, including the
     dictionary-miss fallback ids and the media branches."""
@@ -123,33 +124,27 @@ def test_link_canonicalize_composed_equals_two_stage(spark):
     assert two_stage.exceptAll(composed).count() == 0
 
 
-def test_literal_map_link_equals_join_path(spark, monkeypatch):
-    """r06 optimization: the literal-map linking path (composed map folded
-    into a GetMapValue expression) must be row-identical to the
-    broadcast-join path — KG_LITERAL_MAP_MAX=0 forces the join fallback,
-    so both code paths run on the same input. Covers dictionary hits,
-    dictionary-miss fallback ids, and the media branches."""
-    from kg.link import composed_link_expr, link_canonicalize_triples
+def test_corpus_map_link_equals_two_stage(spark):
+    """The corpus-canonicalization branch of the single pass (one
+    broadcast lookup per mention side, keyed on surface) must be
+    row-identical to linking with NO alias dictionary and then
+    remapping through the corpus canonical map."""
+    from kg.canonicalize import canonical_map_from_corpus, canonicalize_triples
+    from kg.link import link_canonicalize_triples
 
-    docs = load_interleaved(spark, SF_DIR)
-    triples = extract_triples(normalize_spans(docs))
-    assert composed_link_expr() is not None  # vocab fits the bound
-    literal = link_canonicalize_triples(triples, spark)
-    monkeypatch.setenv("KG_LITERAL_MAP_MAX", "0")
-    assert composed_link_expr() is None  # bound disabled -> join path
-    joined = link_canonicalize_triples(triples, spark)
-    assert literal.columns == joined.columns
-    assert literal.exceptAll(joined).count() == 0
-    assert joined.exceptAll(literal).count() == 0
-
-
-def test_top_entities_literal_names_equal_join_path(spark, monkeypatch):
-    """The flagship's literal name-map lookup (kg.queries
-    _top_entities_from_edges) must return exactly the broadcast-join
-    form's rows, in order."""
-    from kg.queries import q_top_entities_fused
-
-    literal = q_top_entities_fused(spark, SF_DIR).collect()
-    monkeypatch.setenv("KG_LITERAL_MAP_MAX", "0")
-    joined = q_top_entities_fused(spark, SF_DIR).collect()
-    assert literal == joined
+    triples = extract_triples(normalize_spans(load_interleaved(spark, SF_DIR)))
+    surfaces = triples.filter(F.col("subj_pos") >= 0).select(
+        F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
+    )
+    # wider than the pipeline's levenshtein<=1 (which merges none of the
+    # fixture's mention surfaces), so the lookup really remaps ids
+    canon = canonical_map_from_corpus(surfaces, max_distance=3, block_prefix=0)
+    assert canon.filter(F.col("surface") != F.col("canonical_name")).count() > 0
+    no_aliases = spark.createDataFrame(
+        [], "surface string, target string, target_id long"
+    )
+    two_stage = canonicalize_triples(link_triples(triples, no_aliases), canon)
+    single = link_canonicalize_triples(triples, spark, canon=canon)
+    assert single.columns == two_stage.columns
+    assert single.exceptAll(two_stage).count() == 0
+    assert two_stage.exceptAll(single).count() == 0

@@ -5,10 +5,11 @@ from pyspark.sql import functions as F
 
 from kg.materialize import InjectedFailure
 from kg.normalize import normalize_spans, reassemble_spans
-from kg.oracles import edges_sql
+from kg import queries as Q
+from kg.oracles import edges_sql, linked_sql, nodes_sql, top_entities_sql
 from kg.pipeline import run_pipeline
 from kg.synth import load_interleaved
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_df_equal
 
 
 def _edge_multiset(pdf):
@@ -17,9 +18,10 @@ def _edge_multiset(pdf):
     return Counter(map(tuple, pdf.to_numpy().tolist()))
 
 
-def test_precision_recall_vs_oracle(spark, duck, tmp_path):
+@pytest.mark.parametrize("extractor", ["fused", "sql"])
+def test_precision_recall_vs_oracle(spark, duck, tmp_path, extractor):
     out = str(tmp_path / "kg_out")
-    run_pipeline(spark, SF_DIR, out, extractor="sql")
+    run_pipeline(spark, SF_DIR, out, extractor=extractor)
     got = _edge_multiset(
         spark.read.parquet(f"{out}/edges")
         .select("subj_id", "pred", "obj_id", "doc_id", "offset")
@@ -31,6 +33,22 @@ def test_precision_recall_vs_oracle(spark, duck, tmp_path):
     recall = tp / sum(want.values())
     # north rule: P/R >= 0.95; deterministic semantics give exactly 1.0
     assert precision == 1.0 and recall == 1.0, (precision, recall)
+
+
+@pytest.mark.parametrize(
+    "fn,sql",
+    [
+        (Q.q_linked, linked_sql()),
+        (Q.q_edges, edges_sql()),
+        (Q.q_nodes, nodes_sql()),
+        (Q.q_top_entities, top_entities_sql()),
+    ],
+    ids=lambda x: getattr(x, "__name__", "sql"),
+)
+def test_stage_query_matches_oracle(spark, duck, fn, sql):
+    """The stage-2..4 contract queries (q_edges also feeds every graph
+    query) and the flagship against their DuckDB oracles."""
+    assert_df_equal(fn(spark, SF_DIR), duck.sql(sql))
 
 
 def test_span_sequence_invariant(spark):

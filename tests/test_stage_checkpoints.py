@@ -31,6 +31,39 @@ def test_stage_checkpoints_equal_and_resume(spark, tmp_path):
     assert stats["edges_written_this_run"] == 0
 
 
+def test_resume_rewrites_uncanonicalized_stage_link(spark, duck, tmp_path):
+    """Output dirs staged by the two-stage chain hold the UNcanonicalized
+    linked table in stage_link, committed under the same run lineage. A
+    resume must rewrite that stage, not write its rows out as edges."""
+    from kg.fused import fused_extract_triples
+    from kg.link import alias_dict, link_triples
+    from kg.materialize import materialize_partitioned
+    from kg.oracles import edges_sql
+    from tests.conftest import assert_df_equal
+
+    out = str(tmp_path / "two_stage_layout")
+    lineage = f"sf_dir={SF_DIR};extractor=fused;canon=dict;buckets=64;groups=4;rep=1"
+    materialize_partitioned(
+        spark,
+        link_triples(fused_extract_triples(spark, SF_DIR), alias_dict(spark)),
+        out,
+        "stage_link",
+        run_id="two-stage",
+        lineage=lineage,
+        group_col=F.pmod(F.xxhash64("doc_id"), F.lit(4)),
+        n_groups=4,
+        sort_cols=["doc_id", "offset", "subj_id"],
+        stage="stage_link",
+    )
+    stats = run_pipeline(spark, SF_DIR, out, extractor="fused", checkpoint_stages=True)
+    assert stats["lineage"] == lineage
+    edges = spark.read.parquet(f"{out}/edges")
+    assert_df_equal(
+        edges.select("subj_id", "pred", "obj_id", "doc_id", "offset"),
+        duck.sql(edges_sql()),
+    )
+
+
 def test_stateful_streaming_dedup(spark, tmp_path):
     from kg.streaming import stateful_dedup_stream
 
