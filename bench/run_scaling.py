@@ -67,7 +67,6 @@ def run_once(sf_dir: str, cores: int, replicate: int, cost: int) -> dict:
             "--shuffle-partitions", str(2 * cores),
             "--replicate", str(replicate),
             "--n-groups", "1",
-            "--extractor", "fused",
         ]
         res = subprocess.run(
             cmd, capture_output=True, text=True, timeout=3600, env=env

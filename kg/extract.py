@@ -8,26 +8,22 @@ Semantics (deterministic dictionary "model" — see kg.vocab):
   PREDICATES token strictly between p1 and p2, else ``near``;
 * every media span emits ``(doc_id, has_<kind>, media_ref)``.
 
-Two interchangeable implementations, asserted equal in tests:
-
-* :func:`extract_triples` — pure native array higher-order functions
-  (filter/transform/zip_with/slice). Zero shuffle, whole-stage codegen;
-  at 100 TB this is a narrow map over the scan.
-* :func:`extract_triples_pandas` — Arrow-batched ``mapInPandas`` kernel:
-  the slot where a real extraction model would sit (reference analog: the
-  batched sentence-transformer encode, ``embed/embedding_generator.py:126-166``
-  — model loaded once per worker, batch in, batch out; no per-row Python UDF).
+:func:`extract_triples` is the native implementation: pure array
+higher-order functions (filter/transform/zip_with/slice), zero shuffle,
+whole-stage codegen. It serves the stagewise contract queries
+(``kg_triples_surface`` and the ``kg_linked``/``kg_edges``/``kg_nodes``
+chain) and is the tests' reference. The shipping path runs the same rules
+in the Arrow clean+extract kernel, :func:`kg.fused.clean_extract` — the
+slot where a real extraction model would sit (reference analog: the
+batched sentence-transformer encode, ``embed/embedding_generator.py:126-166``);
+tests assert the two equal on hand cases and on the corpus.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kg.schemas import TRIPLES_SURFACE
 from kg.vocab import DEFAULT_PRED, ENTITY_SURFACES, PREDICATES
 
 def _ent_arr() -> Column:
@@ -111,58 +107,6 @@ def extract_triples(spans_norm: DataFrame) -> DataFrame:
             "t.obj_pos",
         )
     )
-    media = spans_norm.filter(F.col("kind") != "text").select(
-        "doc_id",
-        "offset",
-        F.col("doc_id").alias("subj_surface"),
-        F.concat(F.lit("has_"), F.col("kind")).alias("pred"),
-        F.col("media_ref").alias("obj_surface"),
-        F.lit(-1).cast("int").alias("subj_pos"),
-        F.lit(-1).cast("int").alias("obj_pos"),
-    )
-    return mention.unionByName(media)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-batched extractor (the "model inference" slot)
-# ---------------------------------------------------------------------------
-
-_ENT_SET = frozenset(ENTITY_SURFACES)
-_PRED_SET = frozenset(PREDICATES)
-
-
-def _extract_batch(doc_ids: List[str], offsets: List[int], texts: List[str]) -> pd.DataFrame:
-    """Batched extraction kernel — same semantics as the HOF path."""
-    out: dict[str, list] = {k: [] for k in TRIPLES_SURFACE.fieldNames()}
-    for doc_id, offset, txt in zip(doc_ids, offsets, texts):
-        toks = [w for w in txt.split(" ") if w]
-        ment = [i for i, w in enumerate(toks) if w in _ENT_SET]
-        for p1, p2 in zip(ment, ment[1:]):
-            pred = next((toks[q] for q in range(p1 + 1, p2) if toks[q] in _PRED_SET),
-                        DEFAULT_PRED)
-            out["doc_id"].append(doc_id)
-            out["offset"].append(offset)
-            out["subj_surface"].append(toks[p1])
-            out["pred"].append(pred)
-            out["obj_surface"].append(toks[p2])
-            out["subj_pos"].append(p1)
-            out["obj_pos"].append(p2)
-    return pd.DataFrame(out)
-
-
-def extract_triples_pandas(spans_norm: DataFrame) -> DataFrame:
-    """mapInPandas extraction (Arrow batches; model-slot variant)."""
-    text = spans_norm.filter(F.col("kind") == "text").select("doc_id", "offset", "text")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # A heavyweight extractor would be loaded once here, per worker
-        # (reference: embed/embedding_generator.py:83-124 load_model).
-        for pdf in batches:
-            yield _extract_batch(
-                pdf["doc_id"].tolist(), pdf["offset"].tolist(), pdf["text"].tolist()
-            )
-
-    mention = text.mapInPandas(_run, schema=TRIPLES_SURFACE)
     media = spans_norm.filter(F.col("kind") != "text").select(
         "doc_id",
         "offset",

@@ -1,35 +1,45 @@
-"""Fused Arrow extraction: flat documents -> surface triples in ONE
-mapInPandas kernel (derive spans + normalize + extract per batch).
+"""Fused Arrow extraction: stages 0+1 in ONE vectorized clean+extract
+kernel over exploded spans, with a flat-documents adapter in front.
+
+* :func:`clean_extract` — exploded spans ``(doc_id, kind, text,
+  media_ref, offset)`` -> TRIPLES_SURFACE: cleans the text spans
+  (kg.cleaning), emits mention pairs (kg.extract rules) and reads media
+  triples straight from ``kind``/``media_ref``.
+* :func:`derive_spans` — flat ``(doc_id:int64, text)`` -> the same span
+  columns, planted dirt included, exactly as kg.synth defines them. It
+  runs inside the kernel's Python call, so flat input crosses the
+  Python boundary once, as raw documents.
+
+:func:`fused_extract_triples` picks the adapter from the input schema: a
+``(doc_id, spans)`` table is exploded natively and fed to the kernel;
+flat documents go through derive + clean_extract. Either way the plan is
+one ``MapInPandas`` over the scan.
 
 Why this exists: the stage-by-stage JVM path (array HOFs + explode) is
 allocation-bound — interpreted higher-order expressions generate so much
 garbage that wall time stops improving with executor threads (measured:
 local[2] ≈ local[32] on the explode stage, java at 640%% CPU from GC).
 Python workers are separate *processes*, so the fused kernel scales with
-cores and is also faster in absolute terms. It implements exactly the
-semantics declared in kg.synth (span derivation) + kg.cleaning +
-kg.extract (mention/pair/predicate rules); tests assert equality against
-the unfused path and the DuckDB oracle.
-
-This is the architecture the north rule prescribes ("exploded span
-sequences flow through vectorized pandas/Arrow UDFs for batched mention
-detection and relation extraction") — batch in, batch out, heavyweight
-state (the vocab dictionaries) loaded once per worker.
+cores and is also faster in absolute terms. Tests assert equality against
+the native path and the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 import os
 import zlib
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 
 from kg.cleaning import clean_text_pandas
+from kg.normalize import explode_spans
 from kg.schemas import TRIPLES_SURFACE
+from kg.session import spread_small_scan
 from kg.synth import (
     MEDIA_EVERY,
     MEDIA_KINDS,
@@ -39,8 +49,8 @@ from kg.synth import (
 )
 from kg.vocab import DEFAULT_PRED, ENTITY_SURFACES, PREDICATES
 
-_ENT = frozenset(ENTITY_SURFACES)
-_PRED = frozenset(PREDICATES)
+_ENT = pa.array(sorted(ENTITY_SURFACES))
+_PRED = pa.array(sorted(PREDICATES))
 
 # Simulated extractor weight (KG_EXTRACTOR_COST=N): N extra crc32 passes
 # over each text span before extraction. The dictionary extractor used for
@@ -84,30 +94,26 @@ def _maybe_inject_failure() -> None:
 def fused_extract_triples(
     spark: SparkSession, sf_dir: str, replicate: int = 1
 ) -> DataFrame:
-    """Flat documents parquet -> TRIPLES_SURFACE via one Arrow kernel."""
-    flat = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    # Parallelism guard: a small input must be spread across the workers
-    # before the Python kernel (with kernel-side tiling below, each of
-    # the `replicate` copies of a partition's docs is processed by that
-    # partition's worker, so the guard also sets the tiled parallelism).
-    # Decide from driver-side file sizes — probing
-    # flat.rdd.getNumPartitions() costs a ~1.3 s plan->RDD conversion
-    # per session. At real scale (total bytes >> threshold) the scan
-    # already has plenty of splits and no shuffle is added.
-    import os
+    """``{sf_dir}/documents.parquet`` -> TRIPLES_SURFACE via one Arrow
+    kernel. A ``spans`` column selects the spans adapter (native explode,
+    then :func:`clean_extract`); otherwise the table is flat
+    ``(doc_id:int64, text)`` and each batch is derived into spans inside
+    the kernel.
 
-    from kg.session import spread_partitions
-
-    target = spread_partitions(spark)
-    try:
-        total_bytes = sum(
-            os.path.getsize(p.removeprefix("file:"))
-            for p in flat.inputFiles()
-        )
-    except OSError:  # non-local paths: fall back to the safe repartition
-        total_bytes = 0
-    if total_bytes < 1 << 30:
-        flat = flat.repartition(target)
+    Both scans go through the small-input spread guard first
+    (kg.session.spread_small_scan); with kernel-side tiling each of the
+    ``replicate`` copies of a partition's docs is processed by that
+    partition's worker, so the guard also sets the tiled parallelism."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if "spans" in docs.columns:
+        if replicate > 1:
+            raise ValueError(
+                "replicate > 1 shifts integer doc ids; it needs flat "
+                "(doc_id:int64, text) documents, not a spans table"
+            )
+        spans = explode_spans(spread_small_scan(spark, docs.select("doc_id", "spans")))
+        return clean_extract_triples(spans)
+    flat = spread_small_scan(spark, docs.select("doc_id", "text"))
     if replicate > 1:
         # r06: tile INSIDE the kernel — the JVM crossJoin shipped
         # `replicate` identical copies of every document through the
@@ -124,6 +130,53 @@ def fused_extract_triples(
     return flat.mapInPandas(_run_batches, schema=TRIPLES_SURFACE)
 
 
+def clean_extract_triples(spans: DataFrame) -> DataFrame:
+    """Exploded RAW spans ``(doc_id, kind, text, media_ref, offset)`` ->
+    TRIPLES_SURFACE through :func:`clean_extract` (one mapInPandas)."""
+    return spans.mapInPandas(_clean_extract_batches, schema=TRIPLES_SURFACE)
+
+
+def _clean_extract_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    _maybe_inject_failure()
+    for pdf in batches:
+        yield clean_extract(pdf)
+
+
+def _run_batches(
+    batches: Iterator[pd.DataFrame], replicate: int = 1
+) -> Iterator[pd.DataFrame]:
+    """The flat-documents kernel: (doc_id:int64, text) batches ->
+    TRIPLES_SURFACE batches, ``clean_extract(derive_spans(pdf))`` in one
+    Python call. Module-level so batch (fused_extract_triples) and
+    streaming (kg.streaming) share it verbatim.
+
+    ``replicate`` tiles each batch kernel-side (replica r = doc ids
+    shifted by r*REPLICA_STRIDE, processed independently and in full) —
+    see fused_extract_triples for why the tiling moved off the JVM."""
+    _maybe_inject_failure()
+    for pdf in batches:
+        if replicate > 1:
+            # tile as ONE frame (np.tile copies string POINTERS, not
+            # bytes) so the kernel keeps full-batch vectorization —
+            # looping `replicate` small kernel calls per batch paid the
+            # per-invocation Arrow/numpy fixed cost 64x and measured
+            # slower than the crossJoin it replaced
+            nums = pdf["doc_id"].to_numpy(dtype="int64")
+            shift = np.repeat(
+                np.arange(replicate, dtype="int64") * REPLICA_STRIDE,
+                len(nums),
+            )
+            pdf = pd.DataFrame(
+                {
+                    "doc_id": np.tile(nums, replicate) + shift,
+                    "text": np.tile(pdf["text"].to_numpy(dtype=object), replicate),
+                }
+            )
+        yield clean_extract(derive_spans(pdf))
+
+
 def _split_nonempty(texts):
     """Vectorized ``[w for w in t.split(' ') if w]`` over a string column:
     one RE2-free Arrow split, then empty tokens dropped by offset
@@ -131,10 +184,6 @@ def _split_nonempty(texts):
     same values as an Arrow array — kept for hash-based pc.is_in, far
     faster than sort-based np.isin on object dtype —, starts: int64
     per-row first-token index, counts: int64 per-row token count)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     arr = pa.array(texts, type=pa.string(), from_pandas=True)
     split = pc.split_pattern(arr, " ")
     words = pc.list_flatten(split)
@@ -150,131 +199,112 @@ def _split_nonempty(texts):
     return tokens, kept_arrow, starts, counts
 
 
-def _run_batches(
-    batches: Iterator[pd.DataFrame], replicate: int = 1
-) -> Iterator[pd.DataFrame]:
-    """The fused kernel: (doc_id:int64, text) batches -> TRIPLES_SURFACE
-    batches. Module-level so batch (fused_extract_triples) and streaming
-    (kg.streaming.stream_extract_triples) share it verbatim.
-
-    r06: pass 1 (span derivation) and pass 3 (mention-pair extraction)
-    are numpy/Arrow-vectorized — the previous per-doc/per-token Python
-    loops were ~half the kernel after the cleaning pass went Arrow
-    (guide §4.2: batch work belongs in vectorized native libraries).
-    Semantics are unchanged and pinned by tests/test_fused.py (fused ==
-    native HOF path == DuckDB oracle, row-for-row).
-
-    ``replicate`` tiles each batch kernel-side (replica r = doc ids
-    shifted by r*REPLICA_STRIDE, processed independently and in full) —
-    see fused_extract_triples for why the tiling moved off the JVM."""
-    import numpy as np
-
-    _maybe_inject_failure()
-    for base_pdf in batches:
-        pdf = base_pdf
-        if replicate > 1:
-            # tile as ONE frame (np.tile copies string POINTERS, not
-            # bytes) so the kernel keeps full-batch vectorization —
-            # looping `replicate` small kernel calls per batch paid the
-            # per-invocation Arrow/numpy fixed cost 64x and measured
-            # slower than the crossJoin it replaced
-            nums = base_pdf["doc_id"].to_numpy(dtype="int64")
-            shift = np.repeat(
-                np.arange(replicate, dtype="int64") * REPLICA_STRIDE,
-                len(nums),
-            )
-            pdf = pd.DataFrame(
-                {
-                    "doc_id": np.tile(nums, replicate) + shift,
-                    "text": np.tile(
-                        base_pdf["text"].to_numpy(dtype=object), replicate
-                    ),
-                }
-            )
-        yield _one_batch(pdf, np)
-
-
-def _one_batch(pdf: pd.DataFrame, np) -> pd.DataFrame:
-    """One (doc_id:int64, text) frame -> one TRIPLES_SURFACE frame
-    (the vectorized kernel body; see _run_batches)."""
+def derive_spans(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Flat (doc_id:int64, text) frame -> exploded span columns
+    ``doc_id, kind, text, media_ref, offset`` (the pandas twin of
+    kg.synth.load_interleaved + kg.normalize.explode_spans): 6-word
+    spans, media where ``(doc_id + offset) % MEDIA_EVERY == 0``, planted
+    dirt on the selected text spans."""
     doc_nums = pdf["doc_id"].to_numpy(dtype="int64")
-    doc_ids = np.array(
-        ["doc-%07d" % n for n in doc_nums], dtype=object
-    )
+    doc_ids = np.array(["doc-%07d" % n for n in doc_nums], dtype=object)
     tokens, _tok_arrow, tok_start, tok_count = _split_nonempty(pdf["text"])
 
-    # span table: doc index + span offset per span (kg.synth contract)
     n_spans = (tok_count + WORDS_PER_SPAN - 1) // WORDS_PER_SPAN
     total = int(n_spans.sum())
     doc_idx = np.repeat(np.arange(len(doc_nums)), n_spans)
-    span_i = np.arange(total) - np.repeat(
-        np.cumsum(n_spans) - n_spans, n_spans
-    )
+    span_i = np.arange(total) - np.repeat(np.cumsum(n_spans) - n_spans, n_spans)
     s_key = doc_nums[doc_idx] + span_i
     is_media = (s_key % MEDIA_EVERY) == 0
+    is_text = ~is_media
 
-    # media rows (pass 1 output)
-    m_doc = doc_idx[is_media]
-    m_key = s_key[is_media]
-    kinds = np.array(MEDIA_KINDS, dtype=object)[m_key % 3]
-    m_nums = doc_nums[m_doc]
-    m_off = span_i[is_media]
-    media = {
-        "doc_id": doc_ids[m_doc],
-        "offset": m_off,
-        "subj_surface": doc_ids[m_doc],
-        "pred": np.array(
-            ["has_" + k for k in kinds], dtype=object
-        ),
-        "obj_surface": np.array(
-            [
-                f"media://{k}/{n}-{i}"
-                for k, n, i in zip(kinds, m_nums, m_off)
-            ],
-            dtype=object,
-        ),
-        "subj_pos": np.full(len(m_doc), -1, dtype="int64"),
-        "obj_pos": np.full(len(m_doc), -1, dtype="int64"),
-    }
+    kind = np.full(total, "text", dtype=object)
+    m_kinds = np.array(MEDIA_KINDS, dtype=object)[s_key[is_media] % 3]
+    kind[is_media] = m_kinds
+    media_ref = np.full(total, "", dtype=object)
+    media_ref[is_media] = np.array(
+        [
+            f"media://{k}/{n}-{i}"
+            for k, n, i in zip(
+                m_kinds, doc_nums[doc_idx[is_media]], span_i[is_media]
+            )
+        ],
+        dtype=object,
+    )
 
     # text spans: raw chunks carry the planted dirt (kg.synth contract)
-    t_doc = doc_idx[~is_media]
-    t_i = span_i[~is_media]
+    t_doc = doc_idx[is_text]
+    t_i = span_i[is_text]
     tok_list = tokens.tolist()  # list slicing is ~2x numpy fancy-index
     a = (tok_start[t_doc] + t_i * WORDS_PER_SPAN).tolist()
     b = np.minimum(
         tok_start[t_doc] + (t_i + 1) * WORDS_PER_SPAN,
         tok_start[t_doc] + tok_count[t_doc],
     ).tolist()
-    t_nums = doc_nums[t_doc].tolist()
-    t_is = t_i.tolist()
-    chunks = [
-        plant_dirt_py(n, i, " ".join(tok_list[lo:hi]))
-        for n, i, lo, hi in zip(t_nums, t_is, a, b)
-    ]
+    text = np.full(total, "", dtype=object)
+    text[is_text] = np.array(
+        [
+            plant_dirt_py(n, i, " ".join(tok_list[lo:hi]))
+            for n, i, lo, hi in zip(doc_nums[t_doc].tolist(), t_i.tolist(), a, b)
+        ],
+        dtype=object,
+    )
+    return pd.DataFrame(
+        {
+            "doc_id": doc_ids[doc_idx],
+            "kind": kind,
+            "text": text,
+            "media_ref": media_ref,
+            "offset": span_i,
+        }
+    )
 
-    # pass 2: vectorized normalize (stage-0 Arrow kernel)
-    cleaned = clean_text_pandas(pd.Series(chunks, dtype=object))
+
+def clean_extract(spans: pd.DataFrame) -> pd.DataFrame:
+    """Exploded raw spans ``(doc_id, kind, text, media_ref, offset)`` ->
+    one TRIPLES_SURFACE frame: media spans give
+    ``(doc_id, has_<kind>, media_ref)``; text spans are cleaned
+    (kg.cleaning) and every pair of consecutive mentions gives
+    ``(subj, first predicate between them or near, obj)`` (kg.extract
+    rules). numpy/Arrow-vectorized; semantics pinned by tests/test_fused.py
+    and tests/test_extract.py (kernel == native path == DuckDB oracle)."""
+    doc_ids = spans["doc_id"].to_numpy(dtype=object)
+    kind = spans["kind"].to_numpy(dtype=object)
+    offsets = spans["offset"].to_numpy(dtype="int64")
+    is_text = kind == "text"
+    is_media = ~is_text
+
+    media = {
+        "doc_id": doc_ids[is_media],
+        "offset": offsets[is_media],
+        "subj_surface": doc_ids[is_media],
+        "pred": np.array(["has_" + k for k in kind[is_media]], dtype=object),
+        "obj_surface": spans["media_ref"].to_numpy(dtype=object)[is_media],
+        "subj_pos": np.full(int(is_media.sum()), -1, dtype="int64"),
+        "obj_pos": np.full(int(is_media.sum()), -1, dtype="int64"),
+    }
+
+    # stage 0: vectorized normalize of the text spans only
+    t_row = np.flatnonzero(is_text)
+    cleaned = clean_text_pandas(
+        pd.Series(spans["text"].to_numpy(dtype=object)[t_row], dtype=object)
+    )
     if _EXTRACTOR_COST:
         for ctext in cleaned:
             _simulated_model_cost(ctext)
 
-    # pass 3: vectorized mention-pair extraction (kg.extract rules)
+    # stage 1: vectorized mention-pair extraction (kg.extract rules)
     ctok, ctok_arrow, c_start, c_count = _split_nonempty(cleaned)
-    c_off = np.concatenate((c_start, [c_start[-1] + c_count[-1]])) if len(
-        c_start
-    ) else np.zeros(1, dtype="int64")
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    c_off = (
+        np.concatenate((c_start, [c_start[-1] + c_count[-1]]))
+        if len(c_start)
+        else np.zeros(1, dtype="int64")
+    )
     is_ent = np.asarray(
-        pc.is_in(ctok_arrow, value_set=pa.array(sorted(_ENT)))
-        .to_numpy(zero_copy_only=False),
+        pc.is_in(ctok_arrow, value_set=_ENT).to_numpy(zero_copy_only=False),
         dtype=bool,
     )
     is_pred = np.asarray(
-        pc.is_in(ctok_arrow, value_set=pa.array(sorted(_PRED)))
-        .to_numpy(zero_copy_only=False),
+        pc.is_in(ctok_arrow, value_set=_PRED).to_numpy(zero_copy_only=False),
         dtype=bool,
     )
     ment = np.flatnonzero(is_ent)
@@ -291,9 +321,10 @@ def _one_batch(pdf: pd.DataFrame, np) -> pd.DataFrame:
         preds = np.where(has, ctok[pidx[jc]], DEFAULT_PRED)
     else:
         preds = np.full(len(g1), DEFAULT_PRED, dtype=object)
+    row = t_row[sp]
     triples = {
-        "doc_id": doc_ids[t_doc[sp]],
-        "offset": t_i[sp],
+        "doc_id": doc_ids[row],
+        "offset": offsets[row],
         "subj_surface": ctok[g1],
         "pred": preds,
         "obj_surface": ctok[g2],
@@ -311,4 +342,3 @@ def _one_batch(pdf: pd.DataFrame, np) -> pd.DataFrame:
     res["subj_pos"] = res["subj_pos"].astype("int32")
     res["obj_pos"] = res["obj_pos"].astype("int32")
     return res
-

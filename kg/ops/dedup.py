@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kg.session import spread_small_scan
+
 SHINGLE_W = 3
 NUM_HASHES = 8
 BANDS = 4  # rows-per-band = NUM_HASHES // BANDS = 2
@@ -127,28 +129,15 @@ def _shingles(
     unchanged; dd_minhash_signatures / dd_lsh_candidates /
     dd_neardup_pairs stay oracle-exact."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
-    # parallelism guard (same rationale/sizing as kg.fused): the sandbox
+    # parallelism guard (kg.session.spread_small_scan): the sandbox
     # corpus is one small file = one scan split, which would serialize
     # the kernel AND the 8-way md5 signature aggregation that consumes
-    # its output partitions map-side; at real scale the scan has many
-    # splits and no shuffle is added. ``spread=False`` skips it for
+    # its output partitions map-side. ``spread=False`` skips it for
     # consumers that only feed broadcast-side joins (the intersection
     # verify sides), where the added exchange costs more than the
     # kernel's trivial single-split compute.
     if spread:
-        import os
-
-        from kg.session import spread_partitions
-
-        try:
-            total_bytes = sum(
-                os.path.getsize(p.removeprefix("file:"))
-                for p in d.inputFiles()
-            )
-        except OSError:
-            total_bytes = 0
-        if total_bytes < 1 << 30:
-            d = d.repartition(spread_partitions(spark))
+        d = spread_small_scan(spark, d)
     return d.mapInPandas(_shingle_batches, schema="doc_id long, sh string")
 
 

@@ -25,7 +25,6 @@ from kg.canonicalize import (
     canonical_map,
     canonical_map_from_corpus,
 )
-from kg.extract import extract_triples
 from kg.fused import fused_extract_triples
 from kg.link import link_canonicalize_triples
 from kg.materialize import (
@@ -35,23 +34,7 @@ from kg.materialize import (
     materialize_partitioned,
     parquet_rows,
 )
-from kg.normalize import normalize_spans
 from kg.session import get_spark
-from kg.synth import load_interleaved
-
-
-def _surface_triples(
-    spark: SparkSession, sf_dir: str, extractor: str, replicate: int
-) -> DataFrame:
-    """Stage 0+1 producer: 'fused' = derive+normalize+extract in one
-    Arrow kernel (kg.fused — the at-scale path); 'sql' = the stagewise
-    native-expression path (oracle-parity reference)."""
-    if extractor == "fused":
-        return fused_extract_triples(spark, sf_dir, replicate=replicate)
-    if extractor == "sql":
-        docs = load_interleaved(spark, sf_dir, replicate=replicate)
-        return extract_triples(normalize_spans(docs))
-    raise ValueError(f"unknown extractor {extractor!r}")
 
 
 def _corpus_canon(triples_surface: DataFrame) -> DataFrame:
@@ -81,7 +64,14 @@ def run_pipeline(
     checkpoint_stages: bool = False,
 ) -> dict:
     """End-to-end run (resumable: rerun with same out_dir/sf_dir skips
-    committed partition groups). Returns a stats dict."""
+    committed partition groups). Returns a stats dict.
+
+    Stages 0+1 are kg.fused.fused_extract_triples, which reads flat
+    documents or a ``(doc_id, spans)`` table, whichever ``sf_dir`` holds.
+    ``extractor`` names that producer in the lineage; ``"fused"`` is the
+    only value."""
+    if extractor != "fused":
+        raise ValueError(f"unknown extractor {extractor!r} (only 'fused')")
     run_id = run_id or uuid.uuid4().hex[:12]
     # n_groups is part of the lineage: group id g means "rows with
     # group_col % n_groups == g", so a resume under a different modulus
@@ -124,7 +114,7 @@ def run_pipeline(
         return spark.read.parquet(os.path.join(out_dir, name))
 
     triples_surface = _stage_ckpt(
-        _surface_triples(spark, sf_dir, extractor, replicate),
+        fused_extract_triples(spark, sf_dir, replicate=replicate),
         "stage_extract",
         ["doc_id", "offset", "subj_pos"],
     )
@@ -189,14 +179,6 @@ def main() -> None:
     p.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     p.add_argument("--out", required=True)
     p.add_argument(
-        "--extractor",
-        choices=["sql", "fused"],
-        default="fused",
-        help="stage-1 producer: 'fused' (default) = the at-scale Arrow kernel "
-        "(3-4x faster than the native-expression 'sql' path in a single JVM — "
-        "see kg/fused.py); 'sql' stays for oracle parity",
-    )
-    p.add_argument(
         "--canonicalize",
         choices=["dict", "corpus"],
         default="dict",
@@ -234,7 +216,6 @@ def main() -> None:
             spark,
             args.sf_dir,
             args.out,
-            extractor=args.extractor,
             canonicalize=args.canonicalize,
             run_id=args.run_id,
             n_buckets=args.n_buckets,

@@ -11,7 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg.canonicalize import canonical_concept_rows, canonical_concepts, canonical_map
-from kg.extract import extract_triples, extract_triples_pandas
+from kg.extract import extract_triples
+from kg.fused import clean_extract_triples, fused_extract_triples
 from kg.link import alias_dict, link_canonicalize_triples, link_triples
 from kg.materialize import build_nodes_from_edges
 from kg.normalize import explode_spans, normalize_spans
@@ -31,8 +32,9 @@ def q_triples_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_triples_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics through the Arrow mapInPandas extractor slot."""
-    return extract_triples_pandas(q_spans_norm(spark, sf_dir))
+    """Same semantics through the Arrow clean+extract kernel, run over
+    the raw (dirty) spans table."""
+    return clean_extract_triples(q_spans(spark, sf_dir))
 
 
 def q_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,8 +102,6 @@ def q_top_entities_fused(
     extraction paths are output-identical, asserted in tests/test_fused.py
     and by this query sharing kg_top_entities' oracle SQL). Stage 2+3 run
     as the composed single pass (kg.link.link_canonicalize_triples)."""
-    from kg.fused import fused_extract_triples
-
     triples = fused_extract_triples(spark, sf_dir)
     final = link_canonicalize_triples(triples, spark)
     return _top_entities_from_edges(

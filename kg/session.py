@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def spread_partitions(spark: SparkSession) -> int:
     """Partition count for spreading a SMALL scan before a CPU-dense
-    Arrow kernel (kg.fused / kg.synth / kg.ops.dedup parallelism guards).
+    Arrow kernel (the :func:`spread_small_scan` guard).
 
     1x session cores — not the 2x-cores shuffle-partition default: the
     2x headroom exists so skewed SHUFFLE stages keep every core busy
@@ -33,6 +33,26 @@ def spread_partitions(spark: SparkSession) -> int:
     if v.isdigit() and int(v) > 0:
         return int(v)
     return spark.sparkContext.defaultParallelism
+
+
+def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Parallelism guard for a file scan feeding a CPU-dense kernel: a
+    small input (under 1 GiB — the sandbox corpus is ONE small parquet
+    file = one split) is repartitioned to :func:`spread_partitions` so
+    the kernel does not run on a single core; at real scale the scan
+    already has plenty of splits and no shuffle is added. Decided from
+    driver-side file sizes — probing ``df.rdd.getNumPartitions()`` costs
+    a ~1.3 s plan->RDD conversion per session (PLANS.md §7). Non-local
+    paths fall back to the safe repartition."""
+    try:
+        total_bytes = sum(
+            os.path.getsize(p.removeprefix("file:")) for p in df.inputFiles()
+        )
+    except OSError:
+        total_bytes = 0
+    if total_bytes < 1 << 30:
+        return df.repartition(spread_partitions(spark))
+    return df
 
 
 def get_spark(
@@ -59,7 +79,10 @@ def get_spark(
         or (f"local[{cores}]" if cores else "local[*]")
     )
     is_cluster = not master.startswith("local")
-    n_shuffle = shuffle_partitions or max(8, 2 * (cores or (os.cpu_count() or 8)))
+    # a cluster's cores are the executors', not this driver's: one count
+    # sizes the core cap, the kernel spreads and the shuffle default
+    n_cores = cores or (8 if is_cluster else (os.cpu_count() or 8))
+    n_shuffle = shuffle_partitions or max(8, 2 * n_cores)
 
     b = (
         SparkSession.builder.appName(app)
@@ -94,7 +117,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # consumed by spread_partitions() (kernel parallelism guards)
-        .config("spark.kg.cores", str(cores or (os.cpu_count() or 8)))
+        .config("spark.kg.cores", str(n_cores))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
@@ -121,7 +144,7 @@ def get_spark(
         b = (
             b.config("spark.executor.cores", os.environ.get("KG_EXECUTOR_CORES", "8"))
             .config("spark.executor.memory", os.environ.get("KG_EXECUTOR_MEM", "12g"))
-            .config("spark.cores.max", str(cores or 8))
+            .config("spark.cores.max", str(n_cores))
         )
     # Iceberg routing (north rule: Iceberg tables): configured iff the
     # runtime jar is present — a no-op probe otherwise (kg/iceberg.py)

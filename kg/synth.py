@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg.session import spread_small_scan
+
 WORDS_PER_SPAN = 6
 MEDIA_EVERY = 4  # span is media iff (doc_id + span_idx) % MEDIA_EVERY == 0
 MEDIA_KINDS = ["image", "audio", "video"]
@@ -180,30 +182,11 @@ def load_interleaved(
     the job compute-bound at local[N] so parallel efficiency is measurable;
     semantics per document are unchanged.
     """
-    flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # Local-mode adaptation: the sandbox corpus is ONE small parquet file =
-    # one input split, which would serialize the whole (CPU-heavy) extract
-    # chain onto a single core. On a real lake the scan has thousands of
-    # splits and this repartition never fires. Decided from driver-side
-    # file sizes like kg/fused.py — the df.rdd.getNumPartitions() probe
-    # costs a ~1.3 s plan->RDD conversion per session (PLANS.md §7).
-    # Runs BEFORE the replicate crossJoin so only the base corpus is
+    # Spread BEFORE the replicate crossJoin so only the base corpus is
     # shuffled, not the tiled payload (guide §2.3 — shuffle fewer bytes;
     # each base partition fans out to `replicate` equal outputs, so the
     # balance is identical).
-    import os
-
-    try:
-        total_bytes = sum(
-            os.path.getsize(p.removeprefix("file:"))
-            for p in flat.inputFiles()
-        )
-    except OSError:  # non-local paths: fall back to the safe repartition
-        total_bytes = 0
-    if total_bytes < 1 << 30:
-        from kg.session import spread_partitions
-
-        flat = flat.repartition(spread_partitions(spark))
+    flat = spread_small_scan(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
     if replicate > 1:
         reps = spark.range(replicate).select(F.col("id").alias("_rep"))
         flat = flat.crossJoin(F.broadcast(reps)).select(

@@ -24,6 +24,21 @@ def spark():
     s = get_spark(app="kg-tests", cores=4, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+    # a query left running keeps its Python workers busy and slows every
+    # test after it (tests stop theirs through await_then_stop)
+    left = [q.id for q in s.streams.active]
+    for q in s.streams.active:
+        q.stop()
+    assert not left, f"streaming queries left running: {left}"
+
+
+def await_then_stop(query, timeout):
+    """Wait for a streaming query (up to ``timeout`` s), then stop it even
+    if it has not terminated. Returns awaitTermination's result."""
+    try:
+        return query.awaitTermination(timeout)
+    finally:
+        query.stop()
 
 
 @pytest.fixture(scope="session")

@@ -57,13 +57,16 @@ def test_corpus_canonicalization_pipeline(spark, tmp_path):
     the curated dictionary end-to-end; output is deterministic and passes
     the validation report (incl. mention-count consistency)."""
     from kg.pipeline import run_pipeline
+    from kg.synth import load_interleaved
     from kg.validate import assert_valid
     from tests.conftest import SF_DIR
 
     out_a = str(tmp_path / "a")
     out_b = str(tmp_path / "b")
+    spans_dir = str(tmp_path / "spans")
+    load_interleaved(spark, SF_DIR).write.parquet(f"{spans_dir}/documents.parquet")
     sa = run_pipeline(spark, SF_DIR, out_a, extractor="fused", canonicalize="corpus")
-    sb = run_pipeline(spark, SF_DIR, out_b, extractor="sql", canonicalize="corpus")
+    sb = run_pipeline(spark, spans_dir, out_b, canonicalize="corpus")
     assert_valid(spark, out_a)
     a = spark.read.parquet(f"{out_a}/edges").select(
         "subj_id", "pred", "obj_id", "doc_id", "offset"
@@ -71,7 +74,7 @@ def test_corpus_canonicalization_pipeline(spark, tmp_path):
     b = spark.read.parquet(f"{out_b}/edges").select(
         "subj_id", "pred", "obj_id", "doc_id", "offset"
     )
-    # fused and sql extractors agree under corpus canonicalization too
+    # flat and spans input agree under corpus canonicalization too
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert sa["edges_total"] == sb["edges_total"] > 0
 

@@ -1,12 +1,13 @@
-"""Extraction semantics: hand cases + HOF/pandas parity + DuckDB parity."""
+"""Extraction semantics: hand cases and DuckDB parity for both stage-1
+implementations — the native HOF chain and the Arrow clean+extract kernel
+over exploded spans."""
 
-from pyspark.sql import functions as F
-
-from kg.extract import extract_triples, extract_triples_pandas
-from kg.normalize import normalize_spans
+from kg.extract import extract_triples
+from kg.fused import clean_extract_triples
+from kg.normalize import explode_spans, normalize_spans
 from kg.oracles import triples_surface_sql
+from kg import queries as Q
 from kg.schemas import DOCUMENTS
-from kg.synth import load_interleaved
 from tests.conftest import SF_DIR, assert_df_equal
 
 
@@ -18,13 +19,22 @@ def _mk_docs(spark, spans_by_doc):
     return spark.createDataFrame(rows, DOCUMENTS)
 
 
-def _triples(spark, spans_by_doc, fn=extract_triples):
-    docs = _mk_docs(spark, spans_by_doc)
-    out = fn(normalize_spans(docs))
+def _rows(df):
     return {
         (r.doc_id, r.offset, r.subj_surface, r.pred, r.obj_surface, r.subj_pos, r.obj_pos)
-        for r in out.collect()
+        for r in df.collect()
     }
+
+
+def _triples(spark, spans_by_doc):
+    """The hand case through the native chain and through the kernel;
+    both must give the same rows, which are returned for the case's own
+    assertion."""
+    docs = _mk_docs(spark, spans_by_doc)
+    native = _rows(extract_triples(normalize_spans(docs)))
+    kernel = _rows(clean_extract_triples(explode_spans(docs)))
+    assert native == kernel, (native, kernel)
+    return native
 
 
 def test_adjacent_mentions_with_predicate(spark):
@@ -67,14 +77,11 @@ def test_media_span_triple(spark):
     assert got == {("d9", 3, "d9", "has_image", "media://image/9-0", -1, -1)}
 
 
-def test_pandas_extractor_equals_hof(spark):
-    docs = load_interleaved(spark, SF_DIR)
-    spans = normalize_spans(docs)
-    a = extract_triples(spans)
-    b = extract_triples_pandas(spans)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_matches_duckdb_oracle(spark, duck):
-    docs = load_interleaved(spark, SF_DIR)
-    assert_df_equal(extract_triples(normalize_spans(docs)), duck.sql(triples_surface_sql()))
+    assert_df_equal(Q.q_triples_surface(spark, SF_DIR), duck.sql(triples_surface_sql()))
+
+
+def test_kernel_matches_duckdb_oracle(spark, duck):
+    """kg_triples_pandas_extractor: the kernel over the raw, dirty spans
+    (cleaning included) against the same oracle."""
+    assert_df_equal(Q.q_triples_pandas(spark, SF_DIR), duck.sql(triples_surface_sql()))

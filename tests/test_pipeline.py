@@ -18,10 +18,16 @@ def _edge_multiset(pdf):
     return Counter(map(tuple, pdf.to_numpy().tolist()))
 
 
-@pytest.mark.parametrize("extractor", ["fused", "sql"])
-def test_precision_recall_vs_oracle(spark, duck, tmp_path, extractor):
+@pytest.mark.parametrize("form", ["flat", "spans"])
+def test_precision_recall_vs_oracle(spark, duck, tmp_path, form):
+    """The pipeline over the flat documents table and over the
+    interleaved (doc_id, spans) table derived from it."""
+    sf_dir = SF_DIR
+    if form == "spans":
+        sf_dir = str(tmp_path)
+        load_interleaved(spark, SF_DIR).write.parquet(f"{sf_dir}/documents.parquet")
     out = str(tmp_path / "kg_out")
-    run_pipeline(spark, SF_DIR, out, extractor=extractor)
+    run_pipeline(spark, sf_dir, out)
     got = _edge_multiset(
         spark.read.parquet(f"{out}/edges")
         .select("subj_id", "pred", "obj_id", "doc_id", "offset")
@@ -133,3 +139,15 @@ def test_resume_with_changed_n_groups_is_safe(spark, tmp_path):
         "subj_id", "pred", "obj_id", "doc_id", "offset"
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_extractor_and_spans_replicate_rejected(spark, tmp_path):
+    """`fused` is the only stage-1 producer, and replica tiling shifts
+    integer doc ids, so a spans table cannot be tiled."""
+    from kg.fused import fused_extract_triples
+
+    with pytest.raises(ValueError, match="extractor"):
+        run_pipeline(spark, SF_DIR, str(tmp_path / "out"), extractor="sql")
+    load_interleaved(spark, SF_DIR).write.parquet(f"{tmp_path}/documents.parquet")
+    with pytest.raises(ValueError, match="replicate"):
+        fused_extract_triples(spark, str(tmp_path), replicate=2)

@@ -295,3 +295,19 @@ def test_bfs_and_pmi_consume_checkpointed_bases(spark):
     p = _plan(pmi)
     assert p.count("FileScan") == 0, p
     assert "BroadcastHashJoin" in p, p
+
+
+def test_fused_triples_plan_one_kernel_one_exchange(spark, tmp_path):
+    """Both input forms reach the clean+extract kernel through ONE
+    MapInPandas behind the one spread exchange: flat docs are derived
+    into spans inside the kernel's Python call, and a spans table is
+    exploded natively — neither adds a boundary crossing or a shuffle."""
+    from kg.fused import fused_extract_triples
+    from kg.synth import load_interleaved
+
+    spans_dir = str(tmp_path)
+    load_interleaved(spark, SF_DIR).write.parquet(f"{spans_dir}/documents.parquet")
+    for sf_dir in (SF_DIR, spans_dir):
+        p = _plan(fused_extract_triples(spark, sf_dir))
+        assert p.count("MapInPandas") == 1, p
+        assert p.count("Exchange") == 1, p

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kg.cleaning import clean_text_col, clean_text_pandas
-from kg.extract import _extract_batch
+from kg.fused import clean_extract
 from kg.vocab import DEFAULT_PRED, ENTITY_SURFACES, PREDICATES
 
 # text with the artifact classes the kernel cleans
@@ -128,8 +128,17 @@ def test_extraction_invariants():
     @settings(max_examples=50, deadline=None)
     def prop(spans):
         texts = [" ".join(t) for t in spans]
-        out = _extract_batch(
-            [f"d{i}" for i in range(len(texts))], list(range(len(texts))), texts
+        n = len(texts)
+        out = clean_extract(
+            pd.DataFrame(
+                {
+                    "doc_id": [f"d{i}" for i in range(n)],
+                    "kind": ["text"] * n,
+                    "text": texts,
+                    "media_ref": [""] * n,
+                    "offset": list(range(n)),
+                }
+            )
         )
         ents = set(ENTITY_SURFACES)
         preds = set(PREDICATES) | {DEFAULT_PRED}

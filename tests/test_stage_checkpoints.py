@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from kg.pipeline import run_pipeline
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, await_then_stop
 
 
 def test_stage_checkpoints_equal_and_resume(spark, tmp_path):
@@ -76,7 +76,7 @@ def test_stateful_streaming_dedup(spark, tmp_path):
     docs.write.parquet(in_dir)
     src = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
     q = stateful_dedup_stream(src, out_dir, ckpt)
-    q.awaitTermination(120)
+    await_then_stop(q, 120)
     assert spark.read.parquet(out_dir).count() == 3
 
     # second batch: two duplicates + one new doc -> only the new one emitted
@@ -85,7 +85,7 @@ def test_stateful_streaming_dedup(spark, tmp_path):
     ).write.mode("append").parquet(in_dir)
     src = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
     q = stateful_dedup_stream(src, out_dir, ckpt)
-    q.awaitTermination(120)
+    await_then_stop(q, 120)
     got = spark.read.parquet(out_dir)
     assert got.count() == 4
     assert {r.doc_id for r in got.collect()} == {1, 2, 3, 4}
@@ -105,7 +105,7 @@ def test_stateful_streaming_dedup_with_ttl(spark, tmp_path):
     ).write.parquet(in_dir)
     src = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
     q = stateful_dedup_stream(src, out_dir, ckpt, state_ttl_minutes=30)
-    q.awaitTermination(120)
+    await_then_stop(q, 120)
     got = spark.read.parquet(out_dir)
     assert got.count() == 2
     assert got.filter(F.col("text").contains("dup")).count() == 0

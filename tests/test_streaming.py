@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from kg.fused import fused_extract_triples
 from kg.streaming import stream_extract_triples
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, await_then_stop
 
 
 def test_stream_matches_batch_and_resumes(spark, tmp_path):
@@ -18,7 +18,7 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     flat = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     flat.filter(F.col("doc_id") < 250).write.parquet(in_dir)
     q = stream_extract_triples(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(300)
+    await_then_stop(q, 300)
 
     got_half = spark.read.parquet(out_dir).count()
     want_half = fused_extract_triples(spark, SF_DIR).filter(
@@ -30,7 +30,7 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     # only the new files are processed (streaming resume)
     flat.filter(F.col("doc_id") >= 250).write.mode("append").parquet(in_dir)
     q2 = stream_extract_triples(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(300)
+    await_then_stop(q2, 300)
 
     got = spark.read.parquet(out_dir)
     want = fused_extract_triples(spark, SF_DIR)
@@ -52,9 +52,9 @@ def test_incremental_kg_equals_batch(spark, tmp_path):
 
     flat = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     flat.filter(F.col("doc_id") < 250).write.parquet(in_dir)
-    stream_kg_edges(spark, in_dir, out_dir, ckpt).awaitTermination(300)
+    await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
     flat.filter(F.col("doc_id") >= 250).write.mode("append").parquet(in_dir)
-    stream_kg_edges(spark, in_dir, out_dir, ckpt).awaitTermination(300)
+    await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
 
     batch_out = str(tmp_path / "batch")
     run_pipeline(spark, SF_DIR, batch_out, extractor="fused")
@@ -89,7 +89,7 @@ def test_stateful_dedup_ttl_actually_expires(spark, tmp_path):
         ).parquet(in_dir)
         src = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
         q = stateful_dedup_stream(src, out_dir, ckpt, state_ttl_minutes=ttl_min)
-        q.awaitTermination(120)
+        await_then_stop(q, 120)
 
     run_batch([(1, "first")])
     assert spark.read.parquet(out_dir).count() == 1
@@ -131,7 +131,7 @@ def test_streaming_embed_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_then_stop(q, 120)
 
     got = {
         r.doc_id: list(r.v)
@@ -175,7 +175,7 @@ def test_stream_rate_limit_state_carries_across_batches(spark, tmp_path):
         q = stream_rate_limit(
             spark.readStream.schema(schema).parquet(in_dir), out_dir, ckpt
         )
-        q.awaitTermination(120)
+        await_then_stop(q, 120)
 
     run_batch(batch1)
     run_batch(batch2)
@@ -264,9 +264,9 @@ def test_stream_sessionize_merges_across_batches(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     spark.createDataFrame(drop1, schema).write.parquet(in_dir)
-    stream_sessionize(spark, in_dir, out_dir, ckpt).awaitTermination(120)
+    await_then_stop(stream_sessionize(spark, in_dir, out_dir, ckpt), 120)
     spark.createDataFrame(drop2, schema).write.mode("append").parquet(in_dir)
-    stream_sessionize(spark, in_dir, out_dir, ckpt).awaitTermination(120)
+    await_then_stop(stream_sessionize(spark, in_dir, out_dir, ckpt), 120)
 
     got = {
         (r.user_id, r.n_events, r.start_ts, r.end_ts, r.total_value)
