@@ -1,11 +1,9 @@
-"""Iceberg routing (SURVEY §7.1 stage 4 / §7.4.7; north rule: "partitioned
-Iceberg nodes/edges tables bucketed by subject hash").
+"""Iceberg session seam (SURVEY §7.1 stage 4 / §7.4.7).
 
-The jar (``iceberg-spark-runtime-*``) is NOT baked into this container
-(probed: no lakehouse jars under pyspark/jars, $SPARK_HOME/jars, or
-$ICEBERG_JAR — see ``tests/test_iceberg.py``, which re-runs the probe
-every session), and installing packages is out of scope. So the table
-format is a PROBE + ROUTE seam:
+The Iceberg runtime jar (``iceberg-spark-runtime-*``) does not ship with
+pyspark; a deployment that has it gets the catalog configured by the
+session seam, and ``tests/test_iceberg.py`` checks that the probe and the
+live session agree:
 
 * :func:`find_iceberg_jar` — filesystem probe for the runtime jar
   (must run BEFORE the session is built: Iceberg needs session-level
@@ -13,17 +11,12 @@ format is a PROBE + ROUTE seam:
 * :func:`configure_builder` — adds the Iceberg extension + a local
   hadoop catalog to a SparkSession.Builder when the jar is present
   (wired into ``kg.session.get_spark``);
-* :func:`iceberg_enabled` — runtime check on a live session;
-* :func:`write_edges_iceberg` / :func:`write_nodes_iceberg` — the real
-  Iceberg writes: ``writeTo(...).partitionedBy(bucket(N, subj_id))``
-  uses Iceberg's bucket partition transform — the exact north-star
-  layout (hash-bucketed by subject) with Iceberg's hidden partitioning
-  instead of a physical bucket column.
+* :func:`iceberg_enabled` — runtime check on a live session.
 
-When the jar is absent every caller falls back to the parquet layout in
-``kg.materialize`` (explicit bucket column + real Spark bucketBy catalog
-table), which carries the same co-location guarantees minus Iceberg's
-snapshot metadata — the §7.4.7 documented fallback.
+The pipeline writes its tables as parquet directories only
+(``kg.materialize``: explicit bucket column, staged and committed per
+partition group). No Iceberg table writer ships: none could run or be
+tested without the jar.
 """
 
 from __future__ import annotations
@@ -31,8 +24,7 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 CATALOG = "kg_ice"
 
@@ -95,45 +87,3 @@ def iceberg_enabled(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def write_edges_iceberg(
-    spark: SparkSession,
-    edges: DataFrame,
-    table: str = "edges",
-    n_buckets: int = 64,
-) -> str:
-    """Materialize edges as an Iceberg table hash-bucketed by subject —
-    ``partitionedBy(bucket(n, subj_id))`` is Iceberg's hidden-partition
-    analog of the parquet layout's explicit bucket column. Requires
-    :func:`iceberg_enabled`; callers fall back to
-    ``kg.materialize.materialize_edges`` otherwise."""
-    full = f"{CATALOG}.db.{table}"
-    (
-        edges.sortWithinPartitions("subj_id")
-        .writeTo(full)
-        .using("iceberg")
-        .partitionedBy(F.bucket(n_buckets, F.col("subj_id")))
-        .createOrReplace()
-    )
-    return full
-
-
-def write_nodes_iceberg(
-    spark: SparkSession, nodes: DataFrame, table: str = "nodes"
-) -> str:
-    full = f"{CATALOG}.db.{table}"
-    nodes.writeTo(full).using("iceberg").createOrReplace()
-    return full
-
-
-def probe_report() -> dict:
-    """One-line probe summary for docs/tests."""
-    jar = find_iceberg_jar()
-    return {
-        "iceberg_jar": jar,
-        "available": jar is not None,
-        "fallback": "parquet part_group layout + bucketBy catalog table"
-        if jar is None
-        else None,
-    }

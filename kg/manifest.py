@@ -10,9 +10,10 @@ killed run restarts exactly after the last durable partition.
 The manifest is driver-side metadata (a handful of rows per run), so
 commits are direct pyarrow parquet writes — write-to-temp + atomic rename,
 never a Spark job (a per-commit ``spark.createDataFrame(...).write`` costs
-~10 s of session/PythonRDD overhead each). Reads go through pyarrow too.
-This module is the Iceberg-ready seam: swap these two functions for an
-Iceberg manifest table without touching callers (SURVEY §7.4.7).
+~10 s of session/PythonRDD overhead each). Reads go through pyarrow too,
+and the module does not import pyspark. Its one writer,
+:func:`commit_partition`, has one caller: ``kg.materialize._publish``,
+which commits a partition only after renaming its data into place.
 """
 
 from __future__ import annotations
@@ -25,9 +26,6 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-
-from kg.schemas import MANIFEST
 
 STATUS_COMMITTED = "committed"
 
@@ -51,29 +49,13 @@ def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def _manifest_files(out_dir: str) -> list[str]:
-    return sorted(glob.glob(os.path.join(manifest_path(out_dir), "*.parquet")))
-
-
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Manifest as a Spark DataFrame (for metrics queries)."""
-    files = _manifest_files(out_dir)
-    if not files:
-        return spark.createDataFrame([], MANIFEST)
-    return spark.read.schema(MANIFEST).parquet(manifest_path(out_dir))
-
-
 def read_manifest_rows(out_dir: str) -> list[dict]:
     """Driver-side manifest read (no Spark job)."""
-    files = _manifest_files(out_dir)
-    if not files:
-        return []
-    return pq.read_table(files).to_pylist()
+    files = sorted(glob.glob(os.path.join(manifest_path(out_dir), "*.parquet")))
+    return pq.read_table(files).to_pylist() if files else []
 
 
-def committed_partitions(
-    spark: SparkSession, out_dir: str, stage: str, lineage: str
-) -> set[int]:
+def committed_partitions(out_dir: str, stage: str, lineage: str) -> set[int]:
     return {
         r["partition_id"]
         for r in read_manifest_rows(out_dir)
@@ -84,7 +66,6 @@ def committed_partitions(
 
 
 def commit_partition(
-    spark: SparkSession,
     out_dir: str,
     *,
     run_id: str,

@@ -7,6 +7,13 @@ committed to the manifest *after* its data is durable. A killed run
 re-executes only the uncommitted groups (anti-join against the manifest),
 and the final table is byte-equal to a single-run write.
 
+Every final table directory (each edges ``part_group=g``, the flat
+``nodes/`` table, the optional stage checkpoints) is filled the same way:
+Spark writes under ``<out>/_staging/``, then :func:`_publish` renames the
+finished directory into place, counts its rows from the parquet footers
+and commits it — the only manifest commit in the package. Readers never
+see a partly written table, whenever the run is killed.
+
 Reference analog: the partition-identity thread part-NNNN.parquet ->
 part-NNNN_embeddings.npy -> per-partition Milvus insert loop
 (``infra/scripts/load_data.py:51-92``), minus the positional-alignment
@@ -23,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg import manifest as mf
-from kg.ids import id64
 
 
 class InjectedFailure(RuntimeError):
@@ -61,6 +67,56 @@ def nodes_path(out_dir: str) -> str:
     return os.path.join(out_dir, "nodes")
 
 
+def _staging_path(out_dir: str, table_name: str) -> str:
+    """Cleared staging directory for one table's Spark write."""
+    staging = os.path.join(out_dir, "_staging", table_name)
+    shutil.rmtree(staging, ignore_errors=True)
+    return staging
+
+
+def _publish(
+    out_dir: str,
+    staged: str,
+    final: str,
+    *,
+    run_id: str,
+    stage: str,
+    partition_id: int,
+    lineage: str,
+    started: _dt.datetime,
+) -> int:
+    """Rename the finished ``staged`` directory onto ``final``, count its
+    rows from the footers and commit ``(stage, partition_id)``; returns the
+    rows. An old ``final`` is renamed aside first and deleted only after
+    the swap, so a reader sees the old complete table, no table for the
+    moment between the two renames, or the new complete table — never a
+    partly written or partly deleted one. The commit comes last: a kill
+    before it leaves the partition uncommitted, and a rerun redoes it. A
+    missing ``staged`` (an empty group writes no directory) commits 0."""
+    rows = 0
+    if os.path.exists(staged):
+        replaced = staged + ".replaced"
+        shutil.rmtree(replaced, ignore_errors=True)
+        if os.path.exists(final):
+            os.rename(final, replaced)
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        os.rename(staged, final)
+        shutil.rmtree(replaced, ignore_errors=True)
+        rows = parquet_rows(final)  # driver-side footer count, no job
+    mf.commit_partition(
+        out_dir,
+        run_id=run_id,
+        stage=stage,
+        partition_id=partition_id,
+        rows_in=None,
+        rows_out=rows,
+        skip_reasons=None,
+        started_at=started,
+        lineage=lineage,
+    )
+    return rows
+
+
 def materialize_partitioned(
     spark: SparkSession,
     df: DataFrame,
@@ -83,7 +139,7 @@ def materialize_partitioned(
     manifest; committed groups are skipped on rerun. Returns rows written
     by THIS call."""
     stage = stage or f"materialize_{table_name}"
-    done = mf.committed_partitions(spark, out_dir, stage, lineage)
+    done = mf.committed_partitions(out_dir, stage, lineage)
     table_dir = os.path.join(out_dir, table_name)
 
     # Stale-dir hygiene: a part_group=N dir NOT committed under THIS
@@ -117,9 +173,7 @@ def materialize_partitioned(
     # re-ran the whole upstream plan n_groups times); groups are then
     # promoted into the table dir and committed one at a time, so the
     # resume granularity (and the manifest contract) is unchanged.
-    staging = os.path.join(out_dir, "_staging", table_name)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
+    staging = _staging_path(out_dir, table_name)
     part_group = F.pmod(group_col, F.lit(n_groups)).cast("int")
     subset = df.withColumn("part_group", part_group)
     if len(remaining) < n_groups:
@@ -162,29 +216,17 @@ def materialize_partitioned(
         if fail_after_groups is not None and len(done) >= fail_after_groups:
             raise InjectedFailure(f"injected failure before group {g}")
         started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        src = os.path.join(staging, f"part_group={g}")
-        dst = os.path.join(table_dir, f"part_group={g}")
-        rows = 0
-        if os.path.exists(src):  # an empty group writes no partition dir
-            os.makedirs(table_dir, exist_ok=True)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            shutil.move(src, dst)
-            rows = parquet_rows(dst)  # driver-side footer count, no job
-        mf.commit_partition(
-            spark,
+        total += _publish(
             out_dir,
+            os.path.join(staging, f"part_group={g}"),
+            os.path.join(table_dir, f"part_group={g}"),
             run_id=run_id,
             stage=stage,
             partition_id=g,
-            rows_in=None,
-            rows_out=rows,
-            skip_reasons=None,
-            started_at=started,
             lineage=lineage,
+            started=started,
         )
         done.add(g)
-        total += rows
     shutil.rmtree(os.path.join(out_dir, "_staging"), ignore_errors=True)
     return total
 
@@ -299,68 +341,29 @@ def materialize_nodes(
     run_id: str,
     lineage: str,
 ) -> int:
-    done = mf.committed_partitions(spark, out_dir, "materialize_nodes", lineage)
-    if 0 in done:
+    """Write the flat ``nodes/`` table (``entity_id, name, kind,
+    n_mentions``) as one committed partition; returns its rows, or 0 when
+    it is already committed under ``lineage``."""
+    if 0 in mf.committed_partitions(out_dir, "materialize_nodes", lineage):
         return 0
     started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    path = nodes_path(out_dir)
+    staging = _staging_path(out_dir, "nodes")
     # shard by entity hash; no explicit shard count — AQE sizes the
     # write stage from actual bytes (advisory size), so the table gets
     # a few right-sized files at small scale and full parallelism at
     # large scale instead of a fixed parallelism-many near-empty files
     nodes.repartition("entity_id").sortWithinPartitions(
         "entity_id"
-    ).write.mode("overwrite").parquet(path)
-    rows = parquet_rows(path)  # driver-side footer count, no job
-    mf.commit_partition(
-        spark,
+    ).write.mode("overwrite").parquet(staging)
+    rows = _publish(
         out_dir,
+        staging,
+        nodes_path(out_dir),
         run_id=run_id,
         stage="materialize_nodes",
         partition_id=0,
-        rows_in=None,
-        rows_out=rows,
-        skip_reasons=None,
-        started_at=started,
         lineage=lineage,
+        started=started,
     )
+    shutil.rmtree(os.path.join(out_dir, "_staging"), ignore_errors=True)
     return rows
-
-
-def write_bucketed_table(
-    spark: SparkSession,
-    edges: DataFrame,
-    table: str = "kg_edges_bucketed",
-    n_buckets: int = 16,
-) -> str:
-    """Materialize edges as a REAL Spark bucketed table (bucketBy subj_id,
-    sorted within buckets): self-joins and repeated per-subject joins read
-    co-located buckets with NO shuffle exchange on either side — the
-    at-scale payoff of bucketing the graph by subject hash. (Plain
-    parquet directories can't carry bucket metadata; this goes through
-    the session catalog / warehouse dir.) Returns the table name."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a previous session may have dropped the metadata but left the
-    # managed location behind — clear it so saveAsTable doesn't refuse.
-    # Only when the warehouse conf resolves to an absolute path: an empty
-    # conf would make the join CWD-relative and rmtree an unrelated dir.
-    warehouse = (spark.conf.get("spark.sql.warehouse.dir", "") or "").removeprefix(
-        "file:"
-    )
-    if warehouse and os.path.isabs(warehouse):
-        loc = os.path.join(warehouse, table.lower())
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
-    (
-        edges.write.bucketBy(n_buckets, "subj_id")
-        .sortBy("subj_id")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return table
-
-
-def reset_output(out_dir: str) -> None:
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)

@@ -495,7 +495,6 @@ def train_ivf_centroids(
     n_iters: int = 5,
     init: list[tuple[int, list[float]]] | None = None,
     sample_per_cell: int = 256,
-    collect_means: bool | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Distributed spherical k-means (Lloyd) for the IVF coarse quantizer
     — replaces the fixed vec-id-slot stand-in with TRAINED centroids
@@ -520,9 +519,8 @@ def train_ivf_centroids(
     transfer; this function then collects only the FINAL centroids,
     once, for its list-returning contract — callers at the 10⁶-cell
     scale should consume the DataFrame variant directly, e.g. via
-    ``build_ivf_index``'s centroids argument pipeline). ``collect_means``
-    forces a path for testing; the two are bit-identical (pinned in
-    tests/test_simsearch_dials.py).
+    ``build_ivf_index``'s centroids argument pipeline). The two are
+    bit-identical (pinned in tests/test_simsearch_dials.py).
     Means are L2-renormalized (spherical k-means — assignment and search
     both use dot products on unit vectors); a cell that loses all members
     keeps its previous centroid.
@@ -540,9 +538,7 @@ def train_ivf_centroids(
     per-row values sum into decimal(38,0): exact past 10^12 rows/cell."""
     import math
 
-    if collect_means is None:
-        collect_means = n_cells <= MEANS_COLLECT_MAX_CELLS
-    if not collect_means:
+    if n_cells > MEANS_COLLECT_MAX_CELLS:
         cdf = train_ivf_centroids_df(
             spark, sf_dir, n_cells=n_cells, n_iters=n_iters, init=init,
             sample_per_cell=sample_per_cell,

@@ -14,7 +14,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 SPAN = StructType(
@@ -98,23 +97,5 @@ EDGES = StructType(
         StructField("doc_id", StringType(), False),
         StructField("offset", IntegerType(), False),
         StructField("bucket", IntegerType(), False),
-    ]
-)
-
-# Per-partition checkpoint/lineage manifest (FIXTURES.md §5).
-MANIFEST = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("status", StringType(), False),
-        StructField("rows_in", LongType(), True),
-        StructField("rows_out", LongType(), True),
-        # JSON-encoded {reason: count} — kept as a string so the manifest
-        # can be written driver-side via pyarrow without a Spark job
-        StructField("skip_reasons", StringType(), True),
-        StructField("started_at", TimestampType(), True),
-        StructField("committed_at", TimestampType(), True),
-        StructField("lineage", StringType(), True),
     ]
 )

@@ -104,6 +104,23 @@ def stream_kg_edges(
     )
 
 
+def _with_arrival(stream: DataFrame) -> DataFrame:
+    """Arrival clock for the stateful operators' timeouts: ``arrival`` is
+    the micro-batch's ingest time under a 0-second watermark. An
+    event-time timeout on it expires state by wall time, and an
+    availableNow run ends once the watermark stops moving (a
+    processing-time timeout asks for another batch on every trigger, so
+    such a run never ends)."""
+    return stream.withColumn("arrival", F.current_timestamp()).withWatermark(
+        "arrival", "0 seconds"
+    )
+
+
+def _arrival_ms(batch: pd.DataFrame) -> int:
+    """Latest ``arrival`` in a group's rows, as epoch milliseconds."""
+    return batch["arrival"].max().value // 1_000_000
+
+
 def stateful_dedup_stream(
     docs_stream: DataFrame,
     out_dir: str,
@@ -120,13 +137,15 @@ def stateful_dedup_stream(
 
     ``state_ttl_minutes`` bounds state for CONTINUOUS streams: with a TTL,
     each key's 'seen' marker expires ``state_ttl_minutes`` after its last
-    arrival (ProcessingTimeTimeout + ``setTimeoutDuration``; expired keys
-    are removed on timeout), so state size tracks the recent-key working
-    set instead of growing with every doc_id ever seen. The dedup
-    guarantee weakens accordingly — exact within the TTL horizon — which
-    is the standard at-scale trade (a 10^12-doc stream cannot keep 10^12
-    markers). None (default, right for availableNow backfills) keeps
-    exact all-time dedup.
+    arrival (EventTimeTimeout on the :func:`_with_arrival` clock,
+    ``setTimeoutTimestamp(max(arrival) + TTL)``; expired keys are removed
+    once a later batch moves the watermark past that deadline, and an
+    availableNow run still terminates), so state size tracks the
+    recent-key working set instead of growing with every doc_id ever
+    seen. The dedup guarantee weakens accordingly — exact within the TTL
+    horizon — which is the standard at-scale trade (a 10^12-doc stream
+    cannot keep 10^12 markers). None (default, right for availableNow
+    backfills) keeps exact all-time dedup.
     """
     import pandas as _pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -145,20 +164,20 @@ def stateful_dedup_stream(
         batch = _pd.concat(list(pdfs), ignore_index=True)
         fresh = not state.exists
         state.update((True,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)  # refresh on every arrival
+        if ttl_ms is not None:  # refresh on every arrival
+            state.setTimeoutTimestamp(_arrival_ms(batch) + ttl_ms)
         # intra-batch survivor must be deterministic too: micro-batch row
         # order is not — sort on every column before taking the first
-        survivor = batch.sort_values(list(batch.columns)).head(1)
-        yield survivor if fresh else batch.iloc[0:0]
+        survivor = batch[["doc_id", "text"]].sort_values(["doc_id", "text"])
+        yield survivor.head(1 if fresh else 0)
 
-    deduped = docs_stream.groupBy("doc_id").applyInPandasWithState(
+    deduped = _with_arrival(docs_stream).groupBy("doc_id").applyInPandasWithState(
         _dedup,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
+            GroupStateTimeout.EventTimeTimeout
             if ttl_ms is not None
             else GroupStateTimeout.NoTimeout
         ),
@@ -188,11 +207,13 @@ def stream_rate_limit(
     window — so stream output over ordered arrivals equals the batch
     ``stateful_admission`` of the union (tested).
 
-    State is exactly-bounded: ProcessingTimeTimeout drops a client's
-    state after a FULL window of inactivity — by then every timestamp in
-    it would have aged out, so expiry is semantics-free (unlike the dedup
-    TTL, which trades exactness for bounded state). Input stream needs
-    (event_id, user_id, ts); arrivals are processed in (ts, event_id)
+    State is exactly-bounded: an EventTimeTimeout on the
+    :func:`_with_arrival` clock drops a client's state a FULL window after
+    its last arrival — by then every timestamp in it would have aged out,
+    so expiry is semantics-free (unlike the dedup TTL, which trades
+    exactness for bounded state), and an availableNow run terminates.
+    Admission itself reads ``ts``, never the arrival clock. Input stream
+    needs (event_id, user_id, ts); arrivals are processed in (ts, event_id)
     order within each batch — exactness across batches assumes per-client
     arrival order respects event time, which is inherent to ANY online
     limiter (it cannot reject yesterday's request today).
@@ -225,7 +246,7 @@ def stream_rate_limit(
             zip(batch["event_id"], batch["tus"]), window=window
         )
         state.update((window,))
-        state.setTimeoutDuration(window_ms)
+        state.setTimeoutTimestamp(_arrival_ms(batch) + window_ms)
         yield _pd.DataFrame(
             {
                 "event_id": batch["event_id"],
@@ -235,7 +256,8 @@ def stream_rate_limit(
         )
 
     decided = (
-        events_stream.withColumn(
+        _with_arrival(events_stream)
+        .withColumn(
             "tus", F.unix_micros(F.col("ts").cast("timestamp"))
         )
         .groupBy("user_id")
@@ -244,7 +266,7 @@ def stream_rate_limit(
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
     return (
@@ -314,15 +336,14 @@ GROUP BY 1, 2, 3"""
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session 2: event-time sessionization on the stream via Spark's
-# NATIVE session_window — the stateful merge-on-overlap operator the
-# batch twin (kg/ops/relational.py::sessionize) hand-builds with a lag
-# window. Watermark bounds per-user state exactly like the tumbling agg.
+# Event-time sessionization via Spark's NATIVE session_window (contract
+# query ev_sessionize_native) — the merge-on-overlap operator the twin
+# kg/ops/relational.py::sessionize hand-builds with a lag window.
 # ---------------------------------------------------------------------------
 
 
 def _session_window_agg(ev: DataFrame) -> DataFrame:
-    """Shared session aggregate: per (user, 30-min-gap session) —
+    """Session aggregate: per (user, 30-min-gap session) —
     (user_id, n_events, start_ts, end_ts, total_value). Bounds come from
     min/max(ts), NOT the session_window struct (whose end is last-event +
     gap), so rows are comparable with the batch lag-window operator.
@@ -346,33 +367,6 @@ def _session_window_agg(ev: DataFrame) -> DataFrame:
             ).alias("total_value"),
         )
         .select("user_id", "n_events", "start_ts", "end_ts", "total_value")
-    )
-
-
-def stream_sessionize(
-    spark: SparkSession, in_dir: str, out_dir: str, ckpt: str
-):
-    """Sessionize an events stream: native session_window state merges
-    sessions across micro-batches (a session split across two file drops
-    comes out as ONE row); the 60-min watermark finalizes a session once
-    event time moves past its close, bounding state. Append mode emits
-    each session exactly once."""
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long,"
-        " event_type string, value double, props string"
-    )
-    src = spark.readStream.schema(schema).parquet(in_dir)
-    # event-time watermarks require TIMESTAMP (not NTZ); session TZ is
-    # pinned UTC, so the cast relabels the same instant bit-for-bit
-    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    sessions = _session_window_agg(src.withWatermark("ts", "60 minutes"))
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -1,17 +1,29 @@
-"""Task-retry recovery drill (round-4 VERDICT item 6; reference Gate C,
-``project idea.pdf`` p.6). The resume tests cover driver restarts; this
-covers the OTHER failure class — a task dying mid-stage — by injecting a
-once-per-attempt failure into the fused kernel (env-keyed,
+"""Failure drills in child processes.
+
+Task retry (round-4 VERDICT item 6; reference Gate C, ``project idea.pdf``
+p.6): the resume tests cover driver restarts; this covers the OTHER
+failure class — a task dying mid-stage — by injecting a once-per-attempt
+failure into the fused kernel (env-keyed,
 ``kg/fused.py:_maybe_inject_failure``) under ``local[4,2]`` and asserting
 Spark retried exactly one task and the output is byte-identical to a
-clean run. Marked slow: boots two extra JVMs (~40 s)."""
+clean run.
 
+Nodes kill: a driver SIGKILLed while it rewrites ``nodes/`` must leave the
+previous complete table for readers, and commit nothing.
+
+Marked slow: each boots extra JVMs (~40 s)."""
+
+import contextlib
 import json
 import os
+import signal
 import subprocess
 import sys
+import time
 
 import pytest
+
+from tests.conftest import SF_DIR, assert_df_equal
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DRILL = [sys.executable, f"{REPO}/scripts/failure_drill.py"]
@@ -37,3 +49,82 @@ def test_task_failure_injection_recovers_with_identical_output():
     # ... and task re-execution recovered to the exact same output
     assert injected["rows"] == clean["rows"] > 0, (clean, injected)
     assert injected["hash"] == clean["hash"], (clean, injected)
+
+
+# rewrites nodes/ from the edges table under a new lineage, as run_pipeline
+# does after its edges write; argv: repo, out dir, lineage
+_NODES_REWRITE = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from kg.canonicalize import canonical_concepts, canonical_map
+from kg.materialize import build_nodes_from_edges, materialize_nodes
+from kg.session import get_spark
+
+spark = get_spark(app="nodes-kill-drill", cores=2, shuffle_partitions=8)
+out, lineage = sys.argv[2], sys.argv[3]
+nodes = build_nodes_from_edges(
+    canonical_map(spark),
+    spark.read.parquet(out + "/edges"),
+    concepts=canonical_concepts(spark),
+)
+materialize_nodes(spark, nodes, out, run_id="killed", lineage=lineage)
+"""
+
+
+@pytest.mark.slow
+def test_kill_during_nodes_write_keeps_previous_table(spark, duck, tmp_path):
+    from kg.manifest import read_manifest_rows
+    from kg.materialize import parquet_rows
+    from kg.oracles import nodes_sql
+    from kg.pipeline import run_pipeline
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, SF_DIR, out)
+    nodes = os.path.join(out, "nodes")
+    before = parquet_rows(nodes)
+    assert before > 0
+
+    lineage = "nodes-kill-drill"
+
+    def commits():  # rows_out of each nodes commit under the new lineage
+        return [
+            r["rows_out"]
+            for r in read_manifest_rows(out)
+            if r["stage"] == "materialize_nodes" and r["lineage"] == lineage
+        ]
+
+    child = subprocess.Popen(
+        [sys.executable, "-c", _NODES_REWRITE, REPO, out, lineage],
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL,
+        start_new_session=True,  # own process group: the JVM dies with it
+    )
+    # kill the child (and its JVM) as soon as the write job has output
+    write_markers = (
+        os.path.join(nodes, "_temporary"),
+        os.path.join(out, "_staging", "nodes"),
+    )
+    deadline = time.time() + 240
+    try:
+        while not any(os.path.exists(m) for m in write_markers):
+            assert child.poll() is None, "nodes rewrite ended before it was seen"
+            assert time.time() < deadline, "nodes write never started"
+            time.sleep(0.002)
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(child.pid, signal.SIGKILL)
+        child.wait(timeout=60)
+
+    assert os.path.exists(os.path.join(nodes, "_SUCCESS"))
+    assert parquet_rows(nodes) == before
+    assert commits() == []
+
+    # a rerun under the same lineage rebuilds the same table
+    subprocess.run(
+        [sys.executable, "-c", _NODES_REWRITE, REPO, out, lineage],
+        check=True, capture_output=True, timeout=300,
+    )
+    assert commits() == [before]
+    got = spark.read.parquet(nodes)
+    assert got.columns == ["entity_id", "name", "kind", "n_mentions"]
+    assert_df_equal(got, duck.sql(nodes_sql()))

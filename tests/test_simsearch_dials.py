@@ -356,20 +356,22 @@ def test_dedrivered_training_bit_identical_to_collect_path(spark, planted_dir):
     """Round-4 VERDICT item 4: past MEANS_COLLECT_MAX_CELLS the trainer
     keeps per-cell means in a DataFrame instead of collect()ing cells x
     dim to the driver each Lloyd iteration. The exact-integer mean sums
-    make the routing PROVABLY result-invariant: force both paths on the
-    same >LITERAL_CENTROID_MAX config (so assignment runs the packed
-    broadcast in both) with real hash-sampling active, and require the
-    trained centroids to be BIT-identical — including through a
-    multi-shard packed assignment (shard_size < n_cells)."""
+    make the routing PROVABLY result-invariant: run the collect path (the
+    default at this cell count) and the DataFrame trainer on the same
+    >LITERAL_CENTROID_MAX config (so assignment runs the packed broadcast
+    in both) with real hash-sampling active, and require the trained
+    centroids to be BIT-identical — at the default shard size and
+    through a multi-shard packed assignment (shard_size < n_cells)."""
     kw = dict(n_cells=80, n_iters=2, sample_per_cell=4)
-    assert kw["n_cells"] > S.LITERAL_CENTROID_MAX
-    a = S.train_ivf_centroids(spark, planted_dir, collect_means=True, **kw)
-    b = S.train_ivf_centroids(spark, planted_dir, collect_means=False, **kw)
+    assert S.LITERAL_CENTROID_MAX < kw["n_cells"] <= S.MEANS_COLLECT_MAX_CELLS
+    a = S.train_ivf_centroids(spark, planted_dir, **kw)
     assert len(a) == kw["n_cells"]
-    assert a == b  # exact float equality, every component
-    cdf = S.train_ivf_centroids_df(spark, planted_dir, shard_size=32, **kw)
-    c = sorted((int(r["cell"]), [float(x) for x in r["cv"]]) for r in cdf.collect())
-    assert c == a
+    for shard in ({}, {"shard_size": 32}):
+        cdf = S.train_ivf_centroids_df(spark, planted_dir, **shard, **kw)
+        got = sorted(
+            (int(r["cell"]), [float(x) for x in r["cv"]]) for r in cdf.collect()
+        )
+        assert got == a  # exact float equality, every component
 
 
 def test_indexed_trained_recall_partition_pruned(spark, planted_dir, tmp_path):

@@ -94,7 +94,8 @@ def test_stateful_streaming_dedup(spark, tmp_path):
 
 def test_stateful_streaming_dedup_with_ttl(spark, tmp_path):
     """TTL-bounded state (continuous-mode config): same first-wins result
-    within the TTL horizon; exercises the ProcessingTimeTimeout path."""
+    within the TTL horizon; exercises the event-time timeout path, whose
+    availableNow run must terminate on its own."""
     from kg.streaming import stateful_dedup_stream
 
     in_dir = str(tmp_path / "in")
@@ -105,7 +106,7 @@ def test_stateful_streaming_dedup_with_ttl(spark, tmp_path):
     ).write.parquet(in_dir)
     src = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
     q = stateful_dedup_stream(src, out_dir, ckpt, state_ttl_minutes=30)
-    await_then_stop(q, 120)
+    assert await_then_stop(q, 120)
     got = spark.read.parquet(out_dir)
     assert got.count() == 2
     assert got.filter(F.col("text").contains("dup")).count() == 0
