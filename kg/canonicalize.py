@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kg.ids import id64
+from kg.session import local_frame
 from kg.vocab import alias_pairs
 
 
@@ -167,8 +168,8 @@ def _driver_cc_rows(
 def _driver_cc(
     spark: SparkSession, sym_pairs: list[tuple[str, str]], max_component: int | None
 ) -> DataFrame:
-    return spark.createDataFrame(
-        _driver_cc_rows(sym_pairs, max_component), "node string, label long"
+    return local_frame(
+        spark, _driver_cc_rows(sym_pairs, max_component), "node string, label long"
     )
 
 
@@ -257,8 +258,9 @@ def canonical_map(spark: SparkSession, max_component: int | None = 1000) -> Data
     if key not in _CANON_CACHE:
         _CANON_CACHE[key] = _canonical_map_rows(max_component)
     # per-session DataFrame memo on top of the row memo: the map is static
-    # dictionary state, and re-running createDataFrame costs ~0.3-0.5 s of
-    # Python->JVM conversion per query invocation (guide §4.5)
+    # dictionary state, so one JVM-local relation serves every query
+    # (guide §4.5). The cost to avoid was never the frame's creation but
+    # the Python tasks that scan a list-built frame; local_frame has none
     cache = getattr(spark, "_kg_canon_map_df", None)
     if cache is None:
         cache = {}
@@ -267,7 +269,8 @@ def canonical_map(spark: SparkSession, max_component: int | None = 1000) -> Data
         except AttributeError:
             pass
     if key not in cache:
-        cache[key] = spark.createDataFrame(
+        cache[key] = local_frame(
+            spark,
             _CANON_CACHE[key],
             "surface string, canonical_id long, canonical_name string",
         )
@@ -304,11 +307,9 @@ def canonical_concepts(
     spark: SparkSession, max_component: int | None = 1000
 ) -> DataFrame:
     """Distinct (entity_id, name, kind='concept') node rows of the
-    dictionary canonical map, deduplicated DRIVER-side (r06): the map is
-    static vocabulary, so deriving concepts via ``canon.select(...)
-    .distinct()`` paid a runtime Exchange per pipeline run for a
-    dictionary-sized dedup a set comprehension does for free. Memoized
-    per session like :func:`canonical_map`."""
+    dictionary canonical map, deduplicated driver-side (static
+    vocabulary, no Spark job) into a JVM-local relation, memoized per
+    session like :func:`canonical_map`."""
     cache = getattr(spark, "_kg_concepts_df", None)
     if cache is None:
         cache = {}
@@ -318,7 +319,8 @@ def canonical_concepts(
             pass
     if max_component not in cache:
         rows = canonical_concept_rows(max_component)
-        cache[max_component] = spark.createDataFrame(
+        cache[max_component] = local_frame(
+            spark,
             [(cid, name, "concept") for cid, name in rows],
             "entity_id long, name string, kind string",
         )

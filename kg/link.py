@@ -30,21 +30,21 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg.ids import id64
+from kg.session import local_frame
 from kg.vocab import ENTITY_KIND, alias_pairs
 
 
 def alias_dict(spark: SparkSession) -> DataFrame:
     """(surface, target, target_id) — the broadcast linking dictionary.
 
-    Memoized per session: the dictionary is static vocabulary (kg.vocab),
-    and re-running ``createDataFrame`` costs ~0.5 s of Python->JVM
-    conversion per query invocation (guide §4.5 — heavyweight init once).
+    A JVM-local relation (:func:`kg.session.local_frame`), memoized per
+    session: the dictionary is static vocabulary (kg.vocab), so one frame
+    serves every query (guide §4.5 — heavyweight init once).
     """
     cached = getattr(spark, "_kg_alias_dict_df", None)
     if cached is not None:
         return cached
-    rows = [(s, t) for s, t in alias_pairs()]
-    df = spark.createDataFrame(rows, "surface string, target string")
+    df = local_frame(spark, list(alias_pairs()), "surface string, target string")
     df = df.withColumn("target_id", id64(F.concat(F.lit("ent:"), F.col("target"))))
     try:
         spark._kg_alias_dict_df = df

@@ -5,7 +5,14 @@ so downstream per-subject traversals and joins co-locate without a
 shuffle; buckets are written in ``n_groups`` partition groups, each group
 committed to the manifest *after* its data is durable. A killed run
 re-executes only the uncommitted groups (anti-join against the manifest),
-and the final table is byte-equal to a single-run write.
+and the final table holds the same rows as a single-run write.
+
+Each table is written by the stage that computes it, with no shuffle in
+front of the write: every edges task (the extraction kernel's, or a
+checkpoint scan's) sorts its own rows by group and sort key and writes
+one file per group it holds, and the nodes table is written straight
+from its one aggregation, which is already hash-partitioned on
+``entity_id``.
 
 Every final table directory (each edges ``part_group=g``, the flat
 ``nodes/`` table, the optional stage checkpoints) is filled the same way:
@@ -117,6 +124,29 @@ def _publish(
     return rows
 
 
+def _write_plan(
+    df: DataFrame,
+    group_col,
+    n_groups: int,
+    sort_cols: list[str],
+    groups: list[int] | None = None,
+) -> DataFrame:
+    """The staged write's plan: tag every row with its partition group
+    ``part_group = pmod(group_col, n_groups)``, keep only ``groups`` (all
+    when None) and sort each partition of ``df`` by ``(part_group,
+    *sort_cols)`` — no exchange. Each task of the stage that computes
+    ``df`` then writes one sorted file per group it holds, with
+    ``partitionBy("part_group")``. A shuffle in front of the write would
+    give fewer files (one per group) but costs a whole extra stage; a hot
+    bucket is spread over the computing tasks instead of landing in one
+    write task."""
+    part_group = F.pmod(group_col, F.lit(n_groups)).cast("int")
+    out = df.withColumn("part_group", part_group)
+    if groups is not None and len(groups) < n_groups:
+        out = out.filter(F.col("part_group").isin(groups))
+    return out.sortWithinPartitions("part_group", *sort_cols)
+
+
 def materialize_partitioned(
     spark: SparkSession,
     df: DataFrame,
@@ -128,7 +158,6 @@ def materialize_partitioned(
     group_col,
     n_groups: int,
     sort_cols: list[str],
-    range_cols: list[str] | None = None,
     stage: str | None = None,
     fail_after_groups: int | None = None,
 ) -> int:
@@ -168,48 +197,15 @@ def materialize_partitioned(
     if not remaining:
         return 0
 
-    # ONE job writes every uncommitted group via partitionBy("part_group")
-    # into a staging dir (round-1 wrote each group in its own job, which
-    # re-ran the whole upstream plan n_groups times); groups are then
-    # promoted into the table dir and committed one at a time, so the
-    # resume granularity (and the manifest contract) is unchanged.
+    # ONE job writes every uncommitted group into a staging dir (round-1
+    # wrote each group in its own job, which re-ran the whole upstream
+    # plan n_groups times); groups are then promoted into the table dir
+    # and committed one at a time, so the resume granularity (and the
+    # manifest contract) is unchanged.
     staging = _staging_path(out_dir, table_name)
-    part_group = F.pmod(group_col, F.lit(n_groups)).cast("int")
-    subset = df.withColumn("part_group", part_group)
-    if len(remaining) < n_groups:
-        subset = subset.filter(F.col("part_group").isin(remaining))
-    # deterministic file layout: HASH-partition on (part_group, first
-    # cluster col) then sort inside. Hash, not repartitionByRange: the
-    # range partitioner runs a SAMPLING job that executes the entire
-    # upstream plan (extraction kernel included) a second time before
-    # the real shuffle (guide §2.4 — an Exchange you did not expect;
-    # measured at sf0.1 x64: 15.2 s range vs 9.6 s hash for the same
-    # write). Hash partitioning is equally deterministic. The hash key
-    # deliberately stops at the FIRST cluster col (the bucket): with
-    # part_group a function of the bucket, every task's rows for one
-    # bucket land in one file — hashing finer (bucket, subj_id) spread
-    # each part_group across every task and wrote n_tasks x n_groups
-    # tiny files, which cost ~1 s per downstream scan of the table
-    # (guide §6, small files hurt twice). No explicit partition count:
-    # AQE sizes the write stage from the actual shuffle bytes
-    # (advisoryPartitionSizeInBytes), so a small run writes a few
-    # right-sized files instead of one near-empty file per core while a
-    # large run keeps full write parallelism — the scale-adaptive
-    # partitioning the round brief demands (a fixed n_write=parallelism
-    # was tuned to the big case and flooded every downstream scan of
-    # the small case with tiny map tasks; the upstream extraction keeps
-    # its own width either way, AQE only coalesces the post-shuffle
-    # sort+encode side).
-    # REBALANCE rather than plain repartition(cols): same hash
-    # clustering, but AQE may also SPLIT an oversized partition (one hot
-    # bucket at real scale) instead of only merging small ones — the
-    # split bucket just writes two sorted files.
-    cluster = [F.col("part_group")] + [
-        F.col(c) for c in (range_cols or sort_cols[:2])[:1]
-    ]
-    subset.hint("rebalance", *cluster).sortWithinPartitions(
-        "part_group", *sort_cols
-    ).write.mode("overwrite").partitionBy("part_group").parquet(staging)
+    _write_plan(df, group_col, n_groups, sort_cols, remaining).write.mode(
+        "overwrite"
+    ).partitionBy("part_group").parquet(staging)
 
     total = 0
     for g in remaining:
@@ -229,6 +225,9 @@ def materialize_partitioned(
         done.add(g)
     shutil.rmtree(os.path.join(out_dir, "_staging"), ignore_errors=True)
     return total
+
+
+EDGE_SORT_COLS = ["bucket", "subj_id", "pred", "obj_id", "doc_id", "offset"]
 
 
 def materialize_edges(
@@ -254,8 +253,7 @@ def materialize_edges(
         lineage=lineage,
         group_col=F.col("bucket"),
         n_groups=n_groups,
-        sort_cols=["bucket", "subj_id", "pred", "obj_id", "doc_id", "offset"],
-        range_cols=["bucket", "subj_id"],
+        sort_cols=EDGE_SORT_COLS,
         stage="materialize_edges",
         fail_after_groups=fail_after_groups,
     )
@@ -274,62 +272,60 @@ def build_nodes_from_edges(
     ``media_ref = 'media://<kind>/<n>-<offset>'`` (kg.synth derivation
     contract). Equality with the DuckDB nodes oracle is asserted in tests.
 
-    ``concepts`` (r06): an already-distinct (entity_id, name, kind) frame
-    — dictionary mode passes kg.canonicalize.canonical_concepts, which
-    dedupes the static map driver-side instead of paying a runtime
-    Exchange for a dictionary-sized distinct.
+    ONE aggregation, one shuffle: every edge explodes into both endpoints
+    as ``(entity_id, name, kind, w=1)`` — name and kind set only on media
+    edges — and the concept rows join the union with ``w=0``; a
+    ``groupBy("entity_id")`` then takes ``max(name)``, ``max(kind)`` and
+    ``sum(w)`` (the mention count; 0 for a concept no edge names). Rows
+    without a kind are provisional ``ent:<surface>`` entities, which are
+    not nodes. ``concepts`` is an (entity_id, name, kind) frame —
+    dictionary mode passes kg.canonicalize.canonical_concepts; otherwise
+    the concepts come from ``canon`` and the aggregate removes their
+    duplicates.
     """
     if concepts is None:
         concepts = canon.select(
             F.col("canonical_id").alias("entity_id"),
             F.col("canonical_name").alias("name"),
             F.lit("concept").alias("kind"),
-        ).distinct()
-    media_edges = edges_final.filter(F.col("pred").startswith("has_"))
-    doc_num = F.substring(F.col("doc_id"), 5, 20).cast("long")
-    # doc + media nodes in ONE pass over the media rows (r06: the
-    # docs/media two-select union scanned the edges table twice and paid
-    # two distinct exchanges; one explode + one distinct halves both)
-    doc_media = (
-        media_edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("subj_id").alias("entity_id"),
-                        F.col("doc_id").alias("name"),
-                        F.lit("document").alias("kind"),
-                    ),
-                    F.struct(
-                        F.col("obj_id").alias("entity_id"),
-                        F.concat(
-                            F.lit("media://"),
-                            F.substring(F.col("pred"), 5, 100),
-                            F.lit("/"),
-                            doc_num,
-                            F.lit("-"),
-                            F.col("offset"),
-                        ).alias("name"),
-                        F.lit("media").alias("kind"),
-                    ),
-                )
-            ).alias("n")
         )
-        .select("n.entity_id", "n.name", "n.kind")
-        .distinct()
+    is_media = F.col("pred").startswith("has_")
+    doc_num = F.substring(F.col("doc_id"), 5, 20).cast("long")
+    media_name = F.concat(
+        F.lit("media://"),
+        F.substring(F.col("pred"), 5, 100),
+        F.lit("/"),
+        doc_num,
+        F.lit("-"),
+        F.col("offset"),
     )
-    all_nodes = concepts.unionByName(doc_media)
-    mentions = (
-        edges_final.select(
-            F.explode(F.array("subj_id", "obj_id")).alias("entity_id")
+    endpoints = edges_final.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("subj_id").alias("entity_id"),
+                    F.when(is_media, F.col("doc_id")).alias("name"),
+                    F.when(is_media, F.lit("document")).alias("kind"),
+                ),
+                F.struct(
+                    F.col("obj_id").alias("entity_id"),
+                    F.when(is_media, media_name).alias("name"),
+                    F.when(is_media, F.lit("media")).alias("kind"),
+                ),
+            )
+        ).alias("n")
+    ).select("n.entity_id", "n.name", "n.kind", F.lit(1).alias("w"))
+    return (
+        endpoints.unionByName(
+            concepts.select("entity_id", "name", "kind", F.lit(0).alias("w"))
         )
         .groupBy("entity_id")
-        .agg(F.count("*").alias("n_mentions"))
-    )
-    return all_nodes.join(mentions, "entity_id", "left").select(
-        "entity_id",
-        "name",
-        "kind",
-        F.coalesce("n_mentions", F.lit(0)).cast("long").alias("n_mentions"),
+        .agg(
+            F.max("name").alias("name"),
+            F.max("kind").alias("kind"),
+            F.sum("w").cast("long").alias("n_mentions"),
+        )
+        .filter(F.col("kind").isNotNull())
     )
 
 
@@ -348,13 +344,10 @@ def materialize_nodes(
         return 0
     started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
     staging = _staging_path(out_dir, "nodes")
-    # shard by entity hash; no explicit shard count — AQE sizes the
-    # write stage from actual bytes (advisory size), so the table gets
-    # a few right-sized files at small scale and full parallelism at
-    # large scale instead of a fixed parallelism-many near-empty files
-    nodes.repartition("entity_id").sortWithinPartitions(
-        "entity_id"
-    ).write.mode("overwrite").parquet(staging)
+    # no repartition: build_nodes_from_edges' aggregate is already
+    # hash-partitioned on entity_id, and AQE sizes its reduce side from
+    # the shuffled bytes, so the write adds only a sort inside each task
+    nodes.sortWithinPartitions("entity_id").write.mode("overwrite").parquet(staging)
     rows = _publish(
         out_dir,
         staging,

@@ -55,6 +55,21 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side constant rows (dictionary maps, a validation report)
+    as a JVM-local relation: the rows go through a pandas frame and
+    Arrow (on in :func:`get_spark`) and plan as ``LocalTableScan``.
+    ``createDataFrame`` over a Python list plans as a Python-backed
+    ``Scan ExistingRDD`` instead, and every scan of it runs Python tasks:
+    the validation report's eleven one-row frames took 4-5 s to collect
+    that way, and 0.02 s as one local relation (sf0.001 output, 4 cores).
+    ``schema`` is a flat DDL string (``"a string, b long"``)."""
+    import pandas as pd
+
+    names = [field.split()[0] for field in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
+
+
 def get_spark(
     app: str = "kg",
     cores: int | None = None,
@@ -93,14 +108,15 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # default 64m coalesces a ~1GB shuffle to ~16 tasks — too coarse to
         # keep 32 cores busy on CPU-heavy post-shuffle stages (sort/encode).
-        # r06: 4m (was 16m) — the staged parquet write is CPU-dense per
-        # shuffled byte (sort + dictionary encode + zstd), so the byte-based
-        # advisory must sit low for the write stage to keep enough tasks
-        # once coalescing is real (parallelismFirst=false below; measured
-        # at sf0.1 x64: write stage 6.5 s at 16m/20 tasks vs 5.2 s at
-        # 4m/~40 tasks, while tiny-input stages still collapse to 1 task
-        # either way). Env-overridable for cluster runs where shuffles are
-        # IO-bound and larger partitions win (guide §9 suggests 256m there).
+        # 4m keeps enough reduce tasks on the CPU-dense aggregations and
+        # sorts behind a shuffle (the nodes aggregate, dedup, the graph
+        # queries) once coalescing is by size (parallelismFirst=false
+        # below), while tiny-input stages still collapse to 1 task. The
+        # KG table writes no longer shuffle; the value was first sized on
+        # a shuffled parquet write (sf0.1 x64: 6.5 s at 16m/20 tasks vs
+        # 5.2 s at 4m/~40 tasks). Env-overridable for cluster runs where
+        # shuffles are IO-bound and larger partitions win (guide §9
+        # suggests 256m there).
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get("KG_ADVISORY_PARTITION", "4m"),
@@ -112,8 +128,8 @@ def get_spark(
         # 1.40 s -> 0.35 s on a 184k-row explode+groupBy). Size-based
         # coalescing is the scale-adaptive behavior the guide prescribes
         # (§2.2): tiny inputs collapse to few tasks, 100 TB inputs keep
-        # full width, and explicit repartition(n, ...) stages (the
-        # CPU-heavy staged writes) are never coalesced by AQE.
+        # full width, and explicit repartition(n) stages (the kernel
+        # spreads) are never coalesced by AQE.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # consumed by spread_partitions() (kernel parallelism guards)

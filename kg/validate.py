@@ -5,8 +5,9 @@ declarative report DataFrame per materialized KG output instead of a
 script of sequential asserts.
 
 Every check is a row (table, check, ok, observed, threshold); a pipeline
-gate is ``report.filter(~ok)``. All checks are aggregations Catalyst
-fuses into a handful of scans — no driver-side iteration over data.
+gate is ``report.filter(~ok)``. The checks are aggregations Catalyst
+fuses into a handful of scans — no driver-side iteration over data; their
+results are collected driver-side into one JVM-local report frame.
 """
 
 from __future__ import annotations
@@ -16,15 +17,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg.session import local_frame
+
 EDGE_COLS = ["subj_id", "pred", "obj_id", "doc_id", "offset", "bucket"]
 NODE_COLS = ["entity_id", "name", "kind", "n_mentions"]
-
-
-def _row(spark: SparkSession, table: str, check: str, ok, observed, threshold):
-    return spark.createDataFrame(
-        [(table, check, bool(ok), str(observed), str(threshold))],
-        "table string, check string, ok boolean, observed string, threshold string",
-    )
 
 
 def validate_output(
@@ -40,19 +36,20 @@ def validate_output(
     duplicate-PK (:151-156), null warnings (:137-141), size thresholds
     (:108-112, :201-209); plus KG-specific bucket-range and
     mention-count-consistency checks."""
-    reports: list[DataFrame] = []
+    rows: list[tuple] = []
+
+    def check(table: str, name: str, ok, observed, threshold) -> None:
+        rows.append((table, name, bool(ok), str(observed), str(threshold)))
 
     for table, cols in (("edges", EDGE_COLS), ("nodes", NODE_COLS)):
         path = os.path.join(out_dir, table)
         exists = os.path.isdir(path)
-        reports.append(_row(spark, table, "dir_exists", exists, exists, True))
+        check(table, "dir_exists", exists, exists, True)
         if not exists:
             continue
         df = spark.read.parquet(path)
         missing = [c for c in cols if c not in df.columns and c != "bucket"]
-        reports.append(
-            _row(spark, table, "schema_columns", not missing, missing or "all", [])
-        )
+        check(table, "schema_columns", not missing, missing or "all", [])
 
     edges_path = os.path.join(out_dir, "edges")
     if os.path.isdir(edges_path):
@@ -69,24 +66,12 @@ def validate_output(
             F.min("part_group").alias("min_g"),
             F.max("part_group").alias("max_g"),
         ).collect()[0]
-        reports.append(
-            _row(spark, "edges", "row_count_min", agg.n >= min_edges, agg.n, min_edges)
-        )
-        reports.append(_row(spark, "edges", "no_null_keys", agg.n_null == 0, agg.n_null, 0))
-        bucket_ok = True
+        check("edges", "row_count_min", agg.n >= min_edges, agg.n, min_edges)
+        check("edges", "no_null_keys", agg.n_null == 0, agg.n_null, 0)
         if "bucket" in edges.columns:
             b = edges.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi")).collect()[0]
             bucket_ok = (b.lo is None) or (b.lo >= 0 and b.hi < n_buckets)
-            reports.append(
-                _row(
-                    spark,
-                    "edges",
-                    "bucket_in_range",
-                    bucket_ok,
-                    (b.lo, b.hi),
-                    (0, n_buckets - 1),
-                )
-            )
+            check("edges", "bucket_in_range", bucket_ok, (b.lo, b.hi), (0, n_buckets - 1))
 
     nodes_path = os.path.join(out_dir, "nodes")
     if os.path.isdir(nodes_path):
@@ -98,31 +83,27 @@ def validate_output(
             .filter(F.col("c") > 1)
             .count()
         )
-        reports.append(
-            _row(spark, "nodes", "row_count_min", n_nodes >= min_nodes, n_nodes, min_nodes)
-        )
-        reports.append(_row(spark, "nodes", "no_duplicate_pk", dup_pk == 0, dup_pk, 0))
+        check("nodes", "row_count_min", n_nodes >= min_nodes, n_nodes, min_nodes)
+        check("nodes", "no_duplicate_pk", dup_pk == 0, dup_pk, 0)
         neg = nodes.filter(F.col("n_mentions") < 0).count()
-        reports.append(_row(spark, "nodes", "mentions_nonneg", neg == 0, neg, 0))
+        check("nodes", "mentions_nonneg", neg == 0, neg, 0)
         if os.path.isdir(edges_path):
             # endpoint-mention consistency: total mentions == 2 * edges
             total = nodes.agg(F.sum("n_mentions")).collect()[0][0] or 0
             n_edges = spark.read.parquet(edges_path).count()
-            reports.append(
-                _row(
-                    spark,
-                    "nodes",
-                    "mention_total_eq_2x_edges",
-                    total == 2 * n_edges,
-                    total,
-                    2 * n_edges,
-                )
+            check(
+                "nodes",
+                "mention_total_eq_2x_edges",
+                total == 2 * n_edges,
+                total,
+                2 * n_edges,
             )
 
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out
+    return local_frame(
+        spark,
+        rows,
+        "table string, check string, ok boolean, observed string, threshold string",
+    )
 
 
 def assert_valid(spark: SparkSession, out_dir: str, **kw) -> None:

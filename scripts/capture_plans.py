@@ -3,9 +3,8 @@
 Usage: python scripts/capture_plans.py <out_dir> [suffix]
 
 Writes <out_dir>/<name>_<suffix>.txt for every captured plan (suffix
-defaults to "after"). Run from a worktree of the round-start commit with
-suffix "before" to produce the comparison set (the judge checks plan
-claims in OPTIMIZATION_r06.md against these files).
+defaults to "after"). Run it from a checkout of an older commit with
+suffix "before" to produce a comparison set.
 """
 
 from __future__ import annotations
@@ -39,7 +38,7 @@ def main() -> None:
 
     from kg.fused import fused_extract_triples
     from kg.link import link_canonicalize_triples
-    from kg.materialize import with_bucket
+    from kg.materialize import EDGE_SORT_COLS, _write_plan, with_bucket
     from kg.ops import dedup, relational, simsearch
     from kg.queries import q_top_entities, q_top_entities_fused
 
@@ -53,27 +52,12 @@ def main() -> None:
         "rel_revenue_by_nation": relational.revenue_by_nation(spark, SF_DIR),
     }
 
-    # the pipeline's staged-write input plan (the shape materialize_
-    # partitioned shuffles and writes), built exactly as run_pipeline
-    # does for the fused default
+    # the pipeline's staged edges write, built exactly as run_pipeline
+    # and kg.materialize.materialize_edges build it for the fused default
     final = link_canonicalize_triples(fused_extract_triples(spark, SF_DIR), spark)
     sel = final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
-    bucketed = with_bucket(sel, 64).withColumn(
-        "part_group", F.pmod(F.col("bucket"), F.lit(4)).cast("int")
-    )
-    n_write = max(spark.sparkContext.defaultParallelism, 2)
-    sort_cols = ["bucket", "subj_id", "pred", "obj_id", "doc_id", "offset"]
-    if suffix == "before":
-        # round-start write shape: range partitioning, explicit width
-        shaped = bucketed.repartitionByRange(
-            n_write, F.col("part_group"), F.col("bucket"), F.col("subj_id")
-        )
-    else:
-        # current write shape (kg/materialize.py): AQE-flexible REBALANCE
-        # on (part_group, bucket)
-        shaped = bucketed.hint("rebalance", F.col("part_group"), F.col("bucket"))
-    plans["kg_pipeline_write_stage"] = shaped.sortWithinPartitions(
-        "part_group", *sort_cols
+    plans["kg_pipeline_write_stage"] = _write_plan(
+        with_bucket(sel, 64), F.col("bucket"), 4, EDGE_SORT_COLS
     )
 
     for name, df in plans.items():

@@ -311,3 +311,50 @@ def test_fused_triples_plan_one_kernel_one_exchange(spark, tmp_path):
         p = _plan(fused_extract_triples(spark, sf_dir))
         assert p.count("MapInPandas") == 1, p
         assert p.count("Exchange") == 1, p
+
+
+def test_nodes_plan_one_aggregation_no_python_scan(spark):
+    """The nodes table is ONE groupBy over the exploded edge endpoints
+    unioned with the concept rows: one hash exchange, no broadcast join,
+    and the concepts enter as a JVM-local relation, not a Python-backed
+    ``Scan ExistingRDD``. The other exchanges in ``q_nodes`` are the
+    round-robin scan spreads of the native extraction chain below the
+    edges."""
+    import re
+
+    from kg.queries import q_nodes
+
+    p = _plan(q_nodes(spark, SF_DIR))
+    exchanges = re.findall(r"(\w*Exchange) (\w+)", p)
+    assert [e for e in exchanges if e[1] != "RoundRobinPartitioning"] == [
+        ("Exchange", "hashpartitioning")
+    ], p
+    assert "ExistingRDD" not in p, p
+
+
+def test_dictionary_frames_plan_as_local_relations(spark):
+    """The static dictionary frames are JVM-local relations: scanning one
+    runs no Python task."""
+    from kg.canonicalize import canonical_concepts, canonical_map
+    from kg.link import alias_dict
+
+    for make in (canonical_concepts, canonical_map, alias_dict):
+        p = _plan(make(spark))
+        assert "LocalTableScan" in p, (make.__name__, p)
+        assert "ExistingRDD" not in p, (make.__name__, p)
+
+
+def test_edges_write_adds_no_exchange_above_kernel(spark):
+    """The staged edges write sorts and writes inside the kernel stage:
+    the only exchange is the spread below MapInPandas, none sits above it
+    (in toString() a parent prints before its child)."""
+    from kg.fused import fused_extract_triples
+    from kg.link import link_canonicalize_triples
+    from kg.materialize import EDGE_SORT_COLS, _write_plan, with_bucket
+
+    final = link_canonicalize_triples(fused_extract_triples(spark, SF_DIR), spark)
+    edges = final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
+    p = _plan(_write_plan(with_bucket(edges, 64), F.col("bucket"), 4, EDGE_SORT_COLS))
+    kernel = p.index("MapInPandas")
+    assert "Exchange" not in p[:kernel], p
+    assert p.count("Exchange") == 1 and "RoundRobinPartitioning" in p[kernel:], p
