@@ -9,11 +9,13 @@ Semantics (deterministic dictionary "model" — see kg.vocab):
 * every media span emits ``(doc_id, has_<kind>, media_ref)``.
 
 :func:`extract_triples` is the native implementation: pure array
-higher-order functions (filter/transform/zip_with/slice), zero shuffle,
-whole-stage codegen. It serves the stagewise contract queries
+higher-order functions (filter/transform/zip_with/slice) and one
+``explode`` over a single scan of the spans, zero shuffle, whole-stage
+codegen. It serves the stagewise contract queries
 (``kg_triples_surface`` and the ``kg_linked``/``kg_edges``/``kg_nodes``
 chain) and is the tests' reference. The shipping path runs the same rules
-in the Arrow clean+extract kernel, :func:`kg.fused.clean_extract` — the
+in the Arrow clean+extract kernel, :func:`kg.fused.clean_extract`
+(reached through :func:`kg.fused.extract_documents`, batch and stream) — the
 slot where a real extraction model would sit (reference analog: the
 batched sentence-transformer encode, ``embed/embedding_generator.py:126-166``);
 tests assert the two equal on hand cases and on the corpus.
@@ -83,37 +85,40 @@ def _pair_to_triple(toks: Column, pp: Column) -> Column:
 def extract_triples(spans_norm: DataFrame) -> DataFrame:
     """Native-HOF extraction over stage-0 output. Returns TRIPLES_SURFACE.
 
+    One pass: each span yields an array of triples (its mention pairs
+    for a text span, the one media triple otherwise) and a single
+    ``explode`` flattens them, so the spans are scanned once. A text
+    branch unioned with a media branch would plan the scan, and its
+    spread exchange, twice.
+
     Tokens are materialized as a column (one split per row) BEFORE the
     higher-order functions: passing the raw split expression into the
     lambdas would inline it at every element_at reference — O(tokens²)
     recomputation of the split (and of the upstream cleaning chain) per
     span.
     """
-    text = spans_norm.filter(F.col("kind") == "text")
     toks_expr = F.filter(F.split(F.col("text"), " "), lambda w: w != F.lit(""))
-    with_toks = text.select("doc_id", "offset", toks_expr.alias("_toks"))
-    mention = (
-        with_toks.select(
-            "doc_id", "offset", _mention_pairs(F.col("_toks")).alias("pairs")
-        )
-        .select("doc_id", "offset", F.explode("pairs").alias("t"))
-        .select(
-            "doc_id",
-            "offset",
-            "t.subj_surface",
-            "t.pred",
-            "t.obj_surface",
-            "t.subj_pos",
-            "t.obj_pos",
+    with_toks = spans_norm.select(
+        "doc_id", "offset", "kind", "media_ref", toks_expr.alias("_toks")
+    )
+    media = F.array(
+        F.struct(
+            F.col("doc_id").alias("subj_surface"),
+            F.concat(F.lit("has_"), F.col("kind")).alias("pred"),
+            F.col("media_ref").alias("obj_surface"),
+            F.lit(-1).cast("int").alias("subj_pos"),
+            F.lit(-1).cast("int").alias("obj_pos"),
         )
     )
-    media = spans_norm.filter(F.col("kind") != "text").select(
+    triples = F.when(
+        F.col("kind") == "text", _mention_pairs(F.col("_toks"))
+    ).otherwise(media)
+    return with_toks.select("doc_id", "offset", F.explode(triples).alias("t")).select(
         "doc_id",
         "offset",
-        F.col("doc_id").alias("subj_surface"),
-        F.concat(F.lit("has_"), F.col("kind")).alias("pred"),
-        F.col("media_ref").alias("obj_surface"),
-        F.lit(-1).cast("int").alias("subj_pos"),
-        F.lit(-1).cast("int").alias("obj_pos"),
+        "t.subj_surface",
+        "t.pred",
+        "t.obj_surface",
+        "t.subj_pos",
+        "t.obj_pos",
     )
-    return mention.unionByName(media)

@@ -10,10 +10,12 @@ kernel over exploded spans, with a flat-documents adapter in front.
   runs inside the kernel's Python call, so flat input crosses the
   Python boundary once, as raw documents.
 
-:func:`fused_extract_triples` picks the adapter from the input schema: a
-``(doc_id, spans)`` table is exploded natively and fed to the kernel;
-flat documents go through derive + clean_extract. Either way the plan is
-one ``MapInPandas`` over the scan.
+:func:`extract_documents` is the one extraction plan over a documents
+DataFrame, batch or streaming: it picks the adapter from the schema (a
+``(doc_id, spans)`` table is exploded natively; flat documents go
+through derive + clean_extract), and either way the plan is one
+``MapInPandas``. :func:`fused_extract_triples` (the batch pipeline) and
+kg.streaming.stream_kg_edges (the incremental one) both call it.
 
 Why this exists: the stage-by-stage JVM path (array HOFs + explode) is
 allocation-bound — interpreted higher-order expressions generate so much
@@ -94,46 +96,35 @@ def _maybe_inject_failure() -> None:
 def fused_extract_triples(
     spark: SparkSession, sf_dir: str, replicate: int = 1
 ) -> DataFrame:
-    """``{sf_dir}/documents.parquet`` -> TRIPLES_SURFACE via one Arrow
-    kernel. A ``spans`` column selects the spans adapter (native explode,
-    then :func:`clean_extract`); otherwise the table is flat
-    ``(doc_id:int64, text)`` and each batch is derived into spans inside
-    the kernel.
-
-    Both scans go through the small-input spread guard first
-    (kg.session.spread_small_scan); with kernel-side tiling each of the
+    """``{sf_dir}/documents.parquet`` -> TRIPLES_SURFACE: the file scan
+    behind the small-input spread guard (kg.session.spread_small_scan),
+    then :func:`extract_documents`. With kernel-side tiling each of the
     ``replicate`` copies of a partition's docs is processed by that
     partition's worker, so the guard also sets the tiled parallelism."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return extract_documents(spread_small_scan(spark, docs), replicate=replicate)
+
+
+def extract_documents(docs: DataFrame, replicate: int = 1) -> DataFrame:
+    """Documents -> TRIPLES_SURFACE through ONE ``MapInPandas``, batch or
+    streaming. The adapter comes from ``docs.columns``: a ``spans``
+    column is exploded natively and fed to :func:`clean_extract`;
+    otherwise the frame is flat ``(doc_id:int64, text)`` and each batch
+    is derived into spans inside the kernel (:func:`_run_batches`)."""
     if "spans" in docs.columns:
         if replicate > 1:
             raise ValueError(
                 "replicate > 1 shifts integer doc ids; it needs flat "
                 "(doc_id:int64, text) documents, not a spans table"
             )
-        spans = explode_spans(spread_small_scan(spark, docs.select("doc_id", "spans")))
-        return clean_extract_triples(spans)
-    flat = spread_small_scan(spark, docs.select("doc_id", "text"))
-    if replicate > 1:
-        # r06: tile INSIDE the kernel — the JVM crossJoin shipped
-        # `replicate` identical copies of every document through the
-        # Python boundary (guide §4.1: you control how many bytes
-        # cross). Each replica is still derived, dirtied, cleaned and
-        # extracted independently (replica r shifts doc ids, which
-        # shifts the planted-dirt selector), so the compute is
-        # unchanged — only the duplicated text transfer is gone.
-        def _tiled(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            return _run_batches(batches, replicate=replicate)
+        return explode_spans(docs).mapInPandas(
+            _clean_extract_batches, schema=TRIPLES_SURFACE
+        )
 
-        return flat.mapInPandas(_tiled, schema=TRIPLES_SURFACE)
+    def _flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _run_batches(batches, replicate=replicate)
 
-    return flat.mapInPandas(_run_batches, schema=TRIPLES_SURFACE)
-
-
-def clean_extract_triples(spans: DataFrame) -> DataFrame:
-    """Exploded RAW spans ``(doc_id, kind, text, media_ref, offset)`` ->
-    TRIPLES_SURFACE through :func:`clean_extract` (one mapInPandas)."""
-    return spans.mapInPandas(_clean_extract_batches, schema=TRIPLES_SURFACE)
+    return docs.select("doc_id", "text").mapInPandas(_flat, schema=TRIPLES_SURFACE)
 
 
 def _clean_extract_batches(
@@ -149,12 +140,15 @@ def _run_batches(
 ) -> Iterator[pd.DataFrame]:
     """The flat-documents kernel: (doc_id:int64, text) batches ->
     TRIPLES_SURFACE batches, ``clean_extract(derive_spans(pdf))`` in one
-    Python call. Module-level so batch (fused_extract_triples) and
-    streaming (kg.streaming) share it verbatim.
+    Python call.
 
     ``replicate`` tiles each batch kernel-side (replica r = doc ids
-    shifted by r*REPLICA_STRIDE, processed independently and in full) —
-    see fused_extract_triples for why the tiling moved off the JVM."""
+    shifted by r*REPLICA_STRIDE, processed independently and in full):
+    the JVM crossJoin it replaced shipped ``replicate`` identical copies
+    of every document through the Python boundary. Each replica is still
+    derived, dirtied, cleaned and extracted on its own (replica r shifts
+    doc ids, which shifts the planted-dirt selector), so only the
+    duplicated text transfer is gone."""
     _maybe_inject_failure()
     for pdf in batches:
         if replicate > 1:

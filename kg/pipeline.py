@@ -83,11 +83,6 @@ def run_pipeline(
         f"buckets={n_buckets};groups={n_groups};rep={replicate}"
     )
     t0 = time.time()
-    timing = os.environ.get("KG_TIMING") == "1"
-
-    def _mark(label: str) -> None:
-        if timing:
-            print(f"[timing] {label} +{time.time() - t0:.1f}s", file=sys.stderr)
 
     def _stage_ckpt(
         df: DataFrame, name: str, sort_cols: list[str], stage_lineage: str = lineage
@@ -110,7 +105,6 @@ def run_pipeline(
             sort_cols=sort_cols,
             stage=name,
         )
-        _mark(f"stage {name} committed")
         return spark.read.parquet(os.path.join(out_dir, name))
 
     triples_surface = _stage_ckpt(
@@ -135,7 +129,6 @@ def run_pipeline(
         # canonical rows (they are swept and rewritten instead)
         stage_lineage=lineage + ";link=canonical",
     )
-    _mark("plan built")
     n_edges_written = materialize_edges(
         spark,
         final.select("subj_id", "pred", "obj_id", "doc_id", "offset"),
@@ -146,7 +139,6 @@ def run_pipeline(
         n_groups=n_groups,
         fail_after_groups=fail_after_groups,
     )
-    _mark("edges written")
     # nodes come from the materialized edges table — reusing disk instead
     # of recomputing the extraction DAG or caching it in-heap
     edges_final = spark.read.parquet(f"{out_dir}/edges")
@@ -157,7 +149,6 @@ def run_pipeline(
     else:
         nodes = build_nodes_from_edges(canon, edges_final)
     n_nodes = materialize_nodes(spark, nodes, out_dir, run_id=run_id, lineage=lineage)
-    _mark("nodes written")
     # footer metadata count — the table was just written and counted
     # group-by-group; a distributed count job re-reads nothing new
     n_edges_total = parquet_rows(f"{out_dir}/edges")

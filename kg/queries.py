@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from kg.canonicalize import canonical_concept_rows, canonical_concepts, canonical_map
 from kg.extract import extract_triples
-from kg.fused import clean_extract_triples, fused_extract_triples
+from kg.fused import extract_documents, fused_extract_triples
 from kg.link import alias_dict, link_canonicalize_triples, link_triples
 from kg.materialize import build_nodes_from_edges
 from kg.normalize import explode_spans, normalize_spans
@@ -34,7 +34,7 @@ def q_triples_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_triples_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same semantics through the Arrow clean+extract kernel, run over
     the raw (dirty) spans table."""
-    return clean_extract_triples(q_spans(spark, sf_dir))
+    return extract_documents(load_interleaved(spark, sf_dir))
 
 
 def q_linked(spark: SparkSession, sf_dir: str) -> DataFrame:

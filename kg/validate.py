@@ -5,9 +5,10 @@ declarative report DataFrame per materialized KG output instead of a
 script of sequential asserts.
 
 Every check is a row (table, check, ok, observed, threshold); a pipeline
-gate is ``report.filter(~ok)``. The checks are aggregations Catalyst
-fuses into a handful of scans — no driver-side iteration over data; their
-results are collected driver-side into one JVM-local report frame.
+gate is ``report.filter(~ok)``. Each table is read once: one aggregation
+per table (plus the nodes duplicate-PK groupBy) computes every check —
+no driver-side iteration over data; the results are collected
+driver-side into one JVM-local report frame.
 """
 
 from __future__ import annotations
@@ -41,20 +42,21 @@ def validate_output(
     def check(table: str, name: str, ok, observed, threshold) -> None:
         rows.append((table, name, bool(ok), str(observed), str(threshold)))
 
+    tables: dict[str, DataFrame] = {}
     for table, cols in (("edges", EDGE_COLS), ("nodes", NODE_COLS)):
         path = os.path.join(out_dir, table)
         exists = os.path.isdir(path)
         check(table, "dir_exists", exists, exists, True)
         if not exists:
             continue
-        df = spark.read.parquet(path)
+        df = tables[table] = spark.read.parquet(path)
         missing = [c for c in cols if c not in df.columns and c != "bucket"]
         check(table, "schema_columns", not missing, missing or "all", [])
 
-    edges_path = os.path.join(out_dir, "edges")
-    if os.path.isdir(edges_path):
-        edges = spark.read.parquet(edges_path)
-        agg = edges.agg(
+    edges = tables.get("edges")
+    if edges is not None:
+        has_bucket = "bucket" in edges.columns
+        e = edges.agg(
             F.count("*").alias("n"),
             F.sum(
                 (
@@ -63,40 +65,43 @@ def validate_output(
                     | F.col("obj_id").isNull()
                 ).cast("long")
             ).alias("n_null"),
-            F.min("part_group").alias("min_g"),
-            F.max("part_group").alias("max_g"),
+            *(
+                [F.min("bucket").alias("lo"), F.max("bucket").alias("hi")]
+                if has_bucket
+                else []
+            ),
         ).collect()[0]
-        check("edges", "row_count_min", agg.n >= min_edges, agg.n, min_edges)
-        check("edges", "no_null_keys", agg.n_null == 0, agg.n_null, 0)
-        if "bucket" in edges.columns:
-            b = edges.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi")).collect()[0]
-            bucket_ok = (b.lo is None) or (b.lo >= 0 and b.hi < n_buckets)
-            check("edges", "bucket_in_range", bucket_ok, (b.lo, b.hi), (0, n_buckets - 1))
+        check("edges", "row_count_min", e.n >= min_edges, e.n, min_edges)
+        check("edges", "no_null_keys", e.n_null == 0, e.n_null, 0)
+        if has_bucket:
+            bucket_ok = (e.lo is None) or (e.lo >= 0 and e.hi < n_buckets)
+            check("edges", "bucket_in_range", bucket_ok, (e.lo, e.hi), (0, n_buckets - 1))
 
-    nodes_path = os.path.join(out_dir, "nodes")
-    if os.path.isdir(nodes_path):
-        nodes = spark.read.parquet(nodes_path)
-        n_nodes = nodes.count()
+    nodes = tables.get("nodes")
+    if nodes is not None:
+        n = nodes.agg(
+            F.count("*").alias("n"),
+            F.sum("n_mentions").alias("total"),
+            F.count(F.when(F.col("n_mentions") < 0, 1)).alias("neg"),
+        ).collect()[0]
         dup_pk = (
             nodes.groupBy("entity_id")
             .agg(F.count("*").alias("c"))
             .filter(F.col("c") > 1)
             .count()
         )
-        check("nodes", "row_count_min", n_nodes >= min_nodes, n_nodes, min_nodes)
+        check("nodes", "row_count_min", n.n >= min_nodes, n.n, min_nodes)
         check("nodes", "no_duplicate_pk", dup_pk == 0, dup_pk, 0)
-        neg = nodes.filter(F.col("n_mentions") < 0).count()
-        check("nodes", "mentions_nonneg", neg == 0, neg, 0)
-        if os.path.isdir(edges_path):
+        check("nodes", "mentions_nonneg", n.neg == 0, n.neg, 0)
+        if edges is not None:
             # endpoint-mention consistency: total mentions == 2 * edges
-            total = nodes.agg(F.sum("n_mentions")).collect()[0][0] or 0
-            n_edges = spark.read.parquet(edges_path).count()
+            total = n.total or 0
             check(
                 "nodes",
                 "mention_total_eq_2x_edges",
-                total == 2 * n_edges,
+                total == 2 * e.n,
                 total,
-                2 * n_edges,
+                2 * e.n,
             )
 
     return local_frame(

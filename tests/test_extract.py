@@ -1,10 +1,10 @@
 """Extraction semantics: hand cases and DuckDB parity for both stage-1
 implementations — the native HOF chain and the Arrow clean+extract kernel
-over exploded spans."""
+over the spans table (kg.fused.extract_documents)."""
 
 from kg.extract import extract_triples
-from kg.fused import clean_extract_triples
-from kg.normalize import explode_spans, normalize_spans
+from kg.fused import extract_documents
+from kg.normalize import normalize_spans
 from kg.oracles import triples_surface_sql
 from kg import queries as Q
 from kg.schemas import DOCUMENTS
@@ -32,7 +32,7 @@ def _triples(spark, spans_by_doc):
     assertion."""
     docs = _mk_docs(spark, spans_by_doc)
     native = _rows(extract_triples(normalize_spans(docs)))
-    kernel = _rows(clean_extract_triples(explode_spans(docs)))
+    kernel = _rows(extract_documents(docs))
     assert native == kernel, (native, kernel)
     return native
 

@@ -50,8 +50,7 @@ def test_kernel_side_tiling_equals_crossjoin_tiling(spark):
     the row multiset must equal the JVM crossJoin tiling it replaced."""
     from pyspark.sql import functions as F
 
-    from kg.fused import _run_batches, fused_extract_triples
-    from kg.schemas import TRIPLES_SURFACE
+    from kg.fused import extract_documents, fused_extract_triples
     from kg.synth import REPLICA_STRIDE
     from tests.conftest import SF_DIR
 
@@ -66,6 +65,6 @@ def test_kernel_side_tiling_equals_crossjoin_tiling(spark):
         (F.col("doc_id") + F.col("_rep") * REPLICA_STRIDE).alias("doc_id"),
         "text",
     )
-    ref = flat.mapInPandas(_run_batches, schema=TRIPLES_SURFACE)
+    ref = extract_documents(flat)
     assert new.exceptAll(ref).count() == 0
     assert ref.exceptAll(new).count() == 0

@@ -313,22 +313,46 @@ def test_fused_triples_plan_one_kernel_one_exchange(spark, tmp_path):
         assert p.count("Exchange") == 1, p
 
 
+def test_streaming_triples_plan_one_kernel_no_repartition(spark, tmp_path):
+    """The stream runs the batch extraction plan without the scan spread:
+    over a flat and over a spans source, one MapInPandas and no
+    Repartition. ``executedPlan`` raises on a streaming frame, so the
+    analyzed plan is checked."""
+    from kg.fused import extract_documents
+    from kg.streaming import _document_stream
+    from kg.synth import load_interleaved
+
+    flat_dir, spans_dir = str(tmp_path / "flat"), str(tmp_path / "spans")
+    flat = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    flat.limit(10).write.parquet(flat_dir)
+    load_interleaved(spark, SF_DIR).limit(10).write.parquet(spans_dir)
+    for in_dir in (flat_dir, spans_dir):
+        triples = extract_documents(_document_stream(spark, in_dir))
+        assert triples.isStreaming
+        p = triples._jdf.queryExecution().analyzed().toString()
+        assert p.count("MapInPandas") == 1, p
+        assert "Repartition" not in p, p
+
+
 def test_nodes_plan_one_aggregation_no_python_scan(spark):
     """The nodes table is ONE groupBy over the exploded edge endpoints
     unioned with the concept rows: one hash exchange, no broadcast join,
     and the concepts enter as a JVM-local relation, not a Python-backed
-    ``Scan ExistingRDD``. The other exchanges in ``q_nodes`` are the
-    round-robin scan spreads of the native extraction chain below the
-    edges."""
+    ``Scan ExistingRDD``. Below the edges the native extraction chain
+    reads the documents once: one ``FileScan`` behind its one
+    round-robin spread (a text branch unioned with a media branch would
+    plan two of each)."""
     import re
 
     from kg.queries import q_nodes
 
     p = _plan(q_nodes(spark, SF_DIR))
     exchanges = re.findall(r"(\w*Exchange) (\w+)", p)
-    assert [e for e in exchanges if e[1] != "RoundRobinPartitioning"] == [
-        ("Exchange", "hashpartitioning")
+    assert sorted(exchanges) == [
+        ("Exchange", "RoundRobinPartitioning"),
+        ("Exchange", "hashpartitioning"),
     ], p
+    assert p.count("FileScan") == 1, p
     assert "ExistingRDD" not in p, p
 
 

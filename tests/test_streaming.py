@@ -1,68 +1,67 @@
 """Structured Streaming: incremental ingest equals batch; checkpoint resume."""
 
-import shutil
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from kg.fused import fused_extract_triples
-from kg.streaming import stream_extract_triples
+from kg.pipeline import run_pipeline
+from kg.streaming import stream_kg_edges
+from kg.synth import load_interleaved
 from tests.conftest import SF_DIR, await_then_stop
 
+EDGE_COLS = ["subj_id", "pred", "obj_id", "doc_id", "offset"]
 
-def test_stream_matches_batch_and_resumes(spark, tmp_path):
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
 
-    # drop half the corpus, stream it
-    flat = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    flat.filter(F.col("doc_id") < 250).write.parquet(in_dir)
-    q = stream_extract_triples(spark, in_dir, out_dir, ckpt)
-    await_then_stop(q, 300)
+@pytest.fixture(scope="module")
+def batch_edges(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("batch"))
+    run_pipeline(spark, SF_DIR, out)
+    return spark.read.parquet(f"{out}/edges").select(EDGE_COLS)
 
-    got_half = spark.read.parquet(out_dir).count()
-    want_half = fused_extract_triples(spark, SF_DIR).filter(
-        F.col("doc_id") < "doc-0000250"
-    ).count()
-    assert got_half == want_half
 
-    # drop the second half into the SAME dir; restart from checkpoint —
-    # only the new files are processed (streaming resume)
-    flat.filter(F.col("doc_id") >= 250).write.mode("append").parquet(in_dir)
-    q2 = stream_extract_triples(spark, in_dir, out_dir, ckpt)
-    await_then_stop(q2, 300)
-
-    got = spark.read.parquet(out_dir)
-    want = fused_extract_triples(spark, SF_DIR)
+def _assert_same_rows(got, want):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
-    shutil.rmtree(ckpt, ignore_errors=True)
 
-
-def test_incremental_kg_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize("form", ["flat", "spans"])
+def test_incremental_kg_equals_batch(spark, tmp_path, batch_edges, form):
     """Full incremental KG construction (extract+link+canonicalize per
-    micro-batch via foreachBatch) over two drops equals the batch
-    pipeline's edges."""
-    from kg.pipeline import run_pipeline
-    from kg.streaming import stream_kg_edges
-
+    micro-batch via foreachBatch) over two drops of flat documents or of
+    the ``(doc_id, spans)`` table equals the batch pipeline's edges. The
+    second drop restarts from the checkpoint: after drop 1 the stream
+    holds exactly the first half's edges, and the restart processes only
+    the new files (streaming resume)."""
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "edges_stream")
-    ckpt = str(tmp_path / "ckpt2")
+    ckpt = str(tmp_path / "ckpt")
 
-    flat = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    flat.filter(F.col("doc_id") < 250).write.parquet(in_dir)
-    await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
-    flat.filter(F.col("doc_id") >= 250).write.mode("append").parquet(in_dir)
-    await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
-
-    batch_out = str(tmp_path / "batch")
-    run_pipeline(spark, SF_DIR, batch_out, extractor="fused")
-    got = spark.read.parquet(out_dir)
-    want = spark.read.parquet(f"{batch_out}/edges").select(
-        "subj_id", "pred", "obj_id", "doc_id", "offset"
+    if form == "flat":
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+        first = F.col("doc_id") < 250
+    else:
+        docs = load_interleaved(spark, SF_DIR)
+        first = F.col("doc_id") < "doc-0000250"
+    docs.filter(first).write.parquet(in_dir)
+    assert await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
+    _assert_same_rows(
+        spark.read.parquet(out_dir),
+        batch_edges.filter(F.col("doc_id") < "doc-0000250"),
     )
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+    docs.filter(~first).write.mode("append").parquet(in_dir)
+    assert await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
+    _assert_same_rows(spark.read.parquet(out_dir), batch_edges)
+
+
+def test_stream_kg_edges_empty_in_dir_raises(spark, tmp_path):
+    """No files means no schema: the stream fails before any query
+    starts, naming the directory."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    with pytest.raises(ValueError, match=re.escape(str(in_dir))):
+        stream_kg_edges(spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert not spark.streams.active
 
 
 def test_stateful_dedup_ttl_actually_expires(spark, tmp_path):
