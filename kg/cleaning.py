@@ -2,29 +2,21 @@
 
 Re-expresses the reference's ordered cleaning chain
 (html -> latex -> urls -> unicode -> whitespace, ``text_cleaner.py:84-127``)
-two ways with identical semantics on the supported input class:
-
-* :func:`clean_text_col` — pure native column expressions (chained
-  ``regexp_replace``/``translate``); stays inside whole-stage codegen, the
-  100 TB hot path.
-* :func:`clean_text_pandas` — an Arrow-vectorized pandas kernel, the
-  "arbitrary Python per batch" slot the reference fills with
-  ``data_processor_optimized.py:42-145``. Semantically IDENTICAL to the
-  native path (same entity list, same fixed accent-fold table) so the
-  two are interchangeable on any input.
+as :func:`clean_text_pandas`, an Arrow-vectorized kernel — the
+"arbitrary Python per batch" slot the reference fills with
+``data_processor_optimized.py:42-145``. It is the engine's one cleaning
+implementation (kg.fused.clean_extract and kg.normalize run it);
+:func:`sql_clean_text` is its DuckDB mirror for the oracles, built from
+the same step tables.
 
 Order matters (the reference applies fixed order; SURVEY §2.3 T6) — both
-paths apply the exact same order. A unit test asserts the two paths agree
-on the fixture corpus.
+apply the exact same order. tests/test_cleaning.py pins the two against
+hand-written expected strings and against each other.
 """
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # 7-char unicode punctuation map (reference analog: text_cleaner.py:32-40).
 _UNICODE_SRC = "\u2018\u2019\u201c\u201d\u2013\u2014\u2026"
@@ -33,9 +25,9 @@ _UNICODE_DST = "''\"\"--."
 # Fixed accent-fold map: every Latin-1-supplement / Latin-Extended-A char
 # whose NFKD decomposition is one ASCII letter + combining marks. This is
 # the NFKD-equivalent fold for the mapped char class, expressed as a
-# translate() so all THREE paths (native / pandas / DuckDB) apply the
-# exact same transformation \u2014 round 1 had open-ended NFKD only in the
-# pandas path, silently diverging from the native path on accented text.
+# translate() so the kernel and the DuckDB oracle apply the exact same
+# transformation (open-ended NFKD in one engine only diverges on
+# accented text).
 # Chars with no single-ASCII decomposition (\u00f8, \u00e6, \u00df, \u0111, \u2026) pass through
 # unchanged in every path (documented input-class boundary).
 _ACCENT_SRC = (
@@ -74,27 +66,6 @@ _URL_STEPS = [
     (r"\S+@\S+\.\S+", " "),
 ]
 
-
-def clean_text_col(c: Column) -> Column:
-    """Native-expression cleaning chain (html→latex→urls→unicode→ws→lower)."""
-    # html: strip tags, decode common entities
-    c = F.regexp_replace(c, r"<[^>]+>", " ")
-    for src, dst in _HTML_ENTITIES:
-        c = F.replace(c, F.lit(src), F.lit(dst))
-    for pat, rep in _LATEX_STEPS:
-        c = F.regexp_replace(c, pat, rep)
-    for pat, rep in _URL_STEPS:
-        c = F.regexp_replace(c, pat, rep)
-    c = F.translate(c, _UNICODE_SRC, _UNICODE_DST)
-    c = F.translate(c, _ACCENT_SRC, _ACCENT_DST)
-    c = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-    return c
-
-
-_PY_LATEX = [(re.compile(p), r.replace("$1", "\\1")) for p, r in _LATEX_STEPS]
-_PY_URLS = [(re.compile(p), r) for p, r in _URL_STEPS]
-_TAG_RE = re.compile(r"<[^>]+>")
-_WS_RE = re.compile(r"\s+")
 _UNI_TABLE = str.maketrans(
     _UNICODE_SRC + _ACCENT_SRC, _UNICODE_DST + _ACCENT_DST
 )
@@ -108,13 +79,11 @@ _TRANS_CLASS = "[" + _UNICODE_SRC + _ACCENT_SRC + "]"
 
 
 def clean_text_pandas(s: pd.Series) -> pd.Series:
-    """Arrow-batch mirror of :func:`clean_text_col` — SAME entity list and
-    SAME fixed accent-fold table, so the two paths are interchangeable on
-    ANY input (round 1 used open-ended html.unescape + NFKD here, which
-    diverged from the native path on entity-rich or accented text; a
-    three-way lockstep test pins the semantics).
+    """The cleaning chain over one batch of strings: a fixed entity list and
+    a fixed accent-fold table (open-ended html.unescape + NFKD would
+    diverge from the DuckDB mirror on entity-rich or accented text).
 
-    r06: the regex chain runs through pyarrow.compute (RE2, vectorized C)
+    The regex chain runs through pyarrow.compute (RE2, vectorized C)
     instead of pandas object-dtype ``str.replace`` (one Python
     ``re.sub`` call per row per step — profiled at ~50% of the whole
     fused kernel; guide §4.2, hand whole batches to vectorized native
@@ -155,7 +124,7 @@ def clean_text_pandas(s: pd.Series) -> pd.Series:
 
 
 # SQL mirror for the DuckDB oracle (single-expression chain over a column
-# reference). Must stay in lockstep with clean_text_col.
+# reference). Must stay in lockstep with clean_text_pandas.
 def sql_clean_text(expr: str) -> str:
     e = f"regexp_replace({expr}, '<[^>]+>', ' ', 'g')"
     for src, dst in _HTML_ENTITIES:

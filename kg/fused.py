@@ -1,29 +1,33 @@
 """Fused Arrow extraction: stages 0+1 in ONE vectorized clean+extract
-kernel over exploded spans, with a flat-documents adapter in front.
+kernel over exploded spans, with a flat-documents adapter in front. This
+is the engine's one extraction implementation: the batch pipeline, the
+stream and every stagewise contract query run it; the DuckDB oracles
+(kg.oracles) are the reference.
 
 * :func:`clean_extract` — exploded spans ``(doc_id, kind, text,
   media_ref, offset)`` -> TRIPLES_SURFACE: cleans the text spans
-  (kg.cleaning), emits mention pairs (kg.extract rules) and reads media
-  triples straight from ``kind``/``media_ref``.
-* :func:`derive_spans` — flat ``(doc_id:int64, text)`` -> the same span
-  columns, planted dirt included, exactly as kg.synth defines them. It
-  runs inside the kernel's Python call, so flat input crosses the
-  Python boundary once, as raw documents.
+  (kg.cleaning), emits mention pairs and reads media triples straight
+  from ``kind``/``media_ref``.
+* kg.synth.derive_spans — flat ``(doc_id:int64, text)`` -> the same span
+  columns, planted dirt included. It runs inside the kernel's Python
+  call, so flat input crosses the Python boundary once, as raw
+  documents.
 
 :func:`extract_documents` is the one extraction plan over a documents
 DataFrame, batch or streaming: it picks the adapter from the schema (a
 ``(doc_id, spans)`` table is exploded natively; flat documents go
 through derive + clean_extract), and either way the plan is one
-``MapInPandas``. :func:`fused_extract_triples` (the batch pipeline) and
-kg.streaming.stream_kg_edges (the incremental one) both call it.
+``MapInPandas``. :func:`fused_extract_triples` (the batch pipeline and
+the stagewise contract queries) and kg.streaming.stream_kg_edges (the
+incremental one) both call it.
 
-Why this exists: the stage-by-stage JVM path (array HOFs + explode) is
-allocation-bound — interpreted higher-order expressions generate so much
-garbage that wall time stops improving with executor threads (measured:
-local[2] ≈ local[32] on the explode stage, java at 640%% CPU from GC).
-Python workers are separate *processes*, so the fused kernel scales with
-cores and is also faster in absolute terms. Tests assert equality against
-the native path and the DuckDB oracle.
+Why a Python kernel: the JVM array-HOF form of the same steps
+(filter/transform/zip_with + explode) is allocation-bound — interpreted
+higher-order expressions generate so much garbage that wall time stops
+improving with executor threads (measured: local[2] ≈ local[32] on the
+explode stage, java at 640%% CPU from GC). Python workers are separate
+*processes*, so the kernel scales with cores and is also faster in
+absolute terms.
 """
 
 from __future__ import annotations
@@ -42,13 +46,7 @@ from kg.cleaning import clean_text_pandas
 from kg.normalize import explode_spans
 from kg.schemas import TRIPLES_SURFACE
 from kg.session import spread_small_scan
-from kg.synth import (
-    MEDIA_EVERY,
-    MEDIA_KINDS,
-    REPLICA_STRIDE,
-    WORDS_PER_SPAN,
-    plant_dirt_py,
-)
+from kg.synth import REPLICA_STRIDE, derive_spans, split_nonempty
 from kg.vocab import DEFAULT_PRED, ENTITY_SURFACES, PREDICATES
 
 _ENT = pa.array(sorted(ENTITY_SURFACES))
@@ -171,96 +169,25 @@ def _run_batches(
         yield clean_extract(derive_spans(pdf))
 
 
-def _split_nonempty(texts):
-    """Vectorized ``[w for w in t.split(' ') if w]`` over a string column:
-    one RE2-free Arrow split, then empty tokens dropped by offset
-    arithmetic. Returns (tokens: np.ndarray[object], tokens_arrow: the
-    same values as an Arrow array — kept for hash-based pc.is_in, far
-    faster than sort-based np.isin on object dtype —, starts: int64
-    per-row first-token index, counts: int64 per-row token count)."""
-    arr = pa.array(texts, type=pa.string(), from_pandas=True)
-    split = pc.split_pattern(arr, " ")
-    words = pc.list_flatten(split)
-    row_len = np.asarray(pc.list_value_length(split).cast(pa.int64()))
-    starts_all = np.concatenate(([0], np.cumsum(row_len)))
-    keep_arrow = pc.not_equal(words, "")
-    keep = np.asarray(keep_arrow.to_numpy(zero_copy_only=False), dtype=bool)
-    kcum = np.concatenate(([0], np.cumsum(keep)))
-    counts = kcum[starts_all[1:]] - kcum[starts_all[:-1]]
-    kept_arrow = words.filter(keep_arrow)
-    tokens = kept_arrow.to_numpy(zero_copy_only=False)
-    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-    return tokens, kept_arrow, starts, counts
-
-
-def derive_spans(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Flat (doc_id:int64, text) frame -> exploded span columns
-    ``doc_id, kind, text, media_ref, offset`` (the pandas twin of
-    kg.synth.load_interleaved + kg.normalize.explode_spans): 6-word
-    spans, media where ``(doc_id + offset) % MEDIA_EVERY == 0``, planted
-    dirt on the selected text spans."""
-    doc_nums = pdf["doc_id"].to_numpy(dtype="int64")
-    doc_ids = np.array(["doc-%07d" % n for n in doc_nums], dtype=object)
-    tokens, _tok_arrow, tok_start, tok_count = _split_nonempty(pdf["text"])
-
-    n_spans = (tok_count + WORDS_PER_SPAN - 1) // WORDS_PER_SPAN
-    total = int(n_spans.sum())
-    doc_idx = np.repeat(np.arange(len(doc_nums)), n_spans)
-    span_i = np.arange(total) - np.repeat(np.cumsum(n_spans) - n_spans, n_spans)
-    s_key = doc_nums[doc_idx] + span_i
-    is_media = (s_key % MEDIA_EVERY) == 0
-    is_text = ~is_media
-
-    kind = np.full(total, "text", dtype=object)
-    m_kinds = np.array(MEDIA_KINDS, dtype=object)[s_key[is_media] % 3]
-    kind[is_media] = m_kinds
-    media_ref = np.full(total, "", dtype=object)
-    media_ref[is_media] = np.array(
-        [
-            f"media://{k}/{n}-{i}"
-            for k, n, i in zip(
-                m_kinds, doc_nums[doc_idx[is_media]], span_i[is_media]
-            )
-        ],
-        dtype=object,
-    )
-
-    # text spans: raw chunks carry the planted dirt (kg.synth contract)
-    t_doc = doc_idx[is_text]
-    t_i = span_i[is_text]
-    tok_list = tokens.tolist()  # list slicing is ~2x numpy fancy-index
-    a = (tok_start[t_doc] + t_i * WORDS_PER_SPAN).tolist()
-    b = np.minimum(
-        tok_start[t_doc] + (t_i + 1) * WORDS_PER_SPAN,
-        tok_start[t_doc] + tok_count[t_doc],
-    ).tolist()
-    text = np.full(total, "", dtype=object)
-    text[is_text] = np.array(
-        [
-            plant_dirt_py(n, i, " ".join(tok_list[lo:hi]))
-            for n, i, lo, hi in zip(doc_nums[t_doc].tolist(), t_i.tolist(), a, b)
-        ],
-        dtype=object,
-    )
-    return pd.DataFrame(
-        {
-            "doc_id": doc_ids[doc_idx],
-            "kind": kind,
-            "text": text,
-            "media_ref": media_ref,
-            "offset": span_i,
-        }
-    )
-
-
 def clean_extract(spans: pd.DataFrame) -> pd.DataFrame:
     """Exploded raw spans ``(doc_id, kind, text, media_ref, offset)`` ->
-    one TRIPLES_SURFACE frame: media spans give
-    ``(doc_id, has_<kind>, media_ref)``; text spans are cleaned
-    (kg.cleaning) and every pair of consecutive mentions gives
-    ``(subj, first predicate between them or near, obj)`` (kg.extract
-    rules). numpy/Arrow-vectorized; semantics pinned by tests/test_fused.py
-    and tests/test_extract.py (kernel == native path == DuckDB oracle)."""
+    one TRIPLES_SURFACE frame, numpy/Arrow-vectorized.
+
+    Extraction rules (a deterministic dictionary "model", kg.vocab):
+
+    * a text span is cleaned (kg.cleaning); its tokens are the non-empty
+      pieces of a split on ``' '``;
+    * a mention is a token in ENTITY_SURFACES, at 0-based position ``p``;
+    * every pair of *consecutive* mentions (p1 < p2) gives
+      ``(subj=tok[p1], pred, obj=tok[p2])``, where ``pred`` is the first
+      PREDICATES token strictly between p1 and p2, else ``near``;
+    * every media span gives ``(doc_id, has_<kind>, media_ref)`` with
+      positions -1.
+
+    This is the slot where a real extraction model would sit (reference
+    analog: the batched sentence-transformer encode,
+    ``embed/embedding_generator.py:126-166``). Semantics are pinned by
+    tests/test_extract.py (hand cases) and by the DuckDB oracle."""
     doc_ids = spans["doc_id"].to_numpy(dtype=object)
     kind = spans["kind"].to_numpy(dtype=object)
     offsets = spans["offset"].to_numpy(dtype="int64")
@@ -286,8 +213,8 @@ def clean_extract(spans: pd.DataFrame) -> pd.DataFrame:
         for ctext in cleaned:
             _simulated_model_cost(ctext)
 
-    # stage 1: vectorized mention-pair extraction (kg.extract rules)
-    ctok, ctok_arrow, c_start, c_count = _split_nonempty(cleaned)
+    # stage 1: vectorized mention-pair extraction
+    ctok, ctok_arrow, c_start, c_count = split_nonempty(cleaned)
     c_off = (
         np.concatenate((c_start, [c_start[-1] + c_count[-1]]))
         if len(c_start)

@@ -7,17 +7,23 @@ document is preserved — order is the explicit ``offset`` column, never
 implicit row order (SURVEY §7.4.2; reference's positional-alignment
 landmine, ``infra/scripts/load_data.py:51-63``).
 
-Cleaning applies only to text spans; media spans pass through untouched.
+Cleaning applies only to text spans — the clean+extract kernel's own
+cleaning (kg.cleaning.clean_text_pandas) — and media spans pass through
+untouched.
 Reference analog: the per-record cleaning stage
 ``data/scripts/data_processor.py:159-171``.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kg.cleaning import clean_text_col
+from kg.cleaning import clean_text_pandas
+from kg.schemas import SPANS_NORM
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -31,23 +37,28 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
+def clean_spans(spans: pd.DataFrame) -> pd.DataFrame:
+    """Exploded spans frame -> the same frame with its text rows cleaned."""
+    text = spans["text"].to_numpy(dtype=object).copy()
+    is_text = (spans["kind"] == "text").to_numpy()
+    text[is_text] = clean_text_pandas(pd.Series(text[is_text], dtype=object))
+    return spans.assign(text=text)
+
+
+def _clean_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        yield clean_spans(pdf)
+
+
 def normalize_spans(docs: DataFrame) -> DataFrame:
-    """Stage 0: explode + normalize text spans (native expression chain)."""
-    return explode_spans(docs).withColumn(
-        "text",
-        F.when(F.col("kind") == "text", clean_text_col(F.col("text"))).otherwise(
-            F.col("text")
-        ),
-    )
+    """Stage 0: explode + normalize text spans (one ``MapInPandas``)."""
+    return explode_spans(docs).mapInPandas(_clean_batches, schema=SPANS_NORM)
 
 
 def reassemble_spans(spans_norm: DataFrame) -> DataFrame:
-    """Re-nest stage-0 output back to (doc_id, spans) ordered by offset.
-
-    Used by the span-sequence-invariant test: reassemble(normalize(x))
-    must equal x (modulo text cleaning, which is identity on an
-    already-clean corpus).
-    """
+    """Re-nest exploded spans back to (doc_id, spans) ordered by offset
+    (kg.synth.load_interleaved; the span-sequence-invariant test checks
+    that reassemble(normalize(x)) is x with its text spans cleaned)."""
     return (
         spans_norm.groupBy("doc_id")
         .agg(

@@ -33,8 +33,7 @@ from pyspark.sql.types import (
 )
 
 from kg.ids import py_id64, sql_id64
-from kg.normalize import explode_spans
-from kg.synth import load_interleaved
+from kg.synth import derived_spans
 
 MEDIA_FEATURES = StructType(
     [
@@ -79,7 +78,7 @@ def _fake_decode(pdf: pd.DataFrame) -> pd.DataFrame:
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extract every media span via Arrow batches."""
     media = (
-        explode_spans(load_interleaved(spark, sf_dir))
+        derived_spans(spark, sf_dir)
         .filter(F.col("kind") != "text")
         .select("doc_id", "media_ref", "kind")
     )

@@ -15,7 +15,13 @@ import time
 import uuid
 
 if __package__ in (None, ""):  # `python kg/pipeline.py` (no spark-submit --py-files)
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    _root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, _root)
+    # the kernel's Python workers unpickle kg functions by reference, and
+    # they inherit this environment when the JVM starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_root, os.environ.get("PYTHONPATH")) if p
+    )
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -7,34 +7,43 @@ gate). Aggregate/computed columns are aliased identically on both sides.
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg.canonicalize import canonical_concept_rows, canonical_concepts, canonical_map
-from kg.extract import extract_triples
-from kg.fused import extract_documents, fused_extract_triples
+from kg.fused import fused_extract_triples
 from kg.link import alias_dict, link_canonicalize_triples, link_triples
 from kg.materialize import build_nodes_from_edges
-from kg.normalize import explode_spans, normalize_spans
-from kg.synth import load_interleaved
+from kg.normalize import clean_spans
+from kg.schemas import SPANS_NORM
+from kg.synth import derive_spans, derived_spans, scan_flat_documents
 
 
 def q_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return explode_spans(load_interleaved(spark, sf_dir))
+    return derived_spans(spark, sf_dir)
+
+
+def _derive_clean_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        yield clean_spans(derive_spans(pdf))
 
 
 def q_spans_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return normalize_spans(load_interleaved(spark, sf_dir))
+    """Derivation and cleaning in one ``MapInPandas``."""
+    return scan_flat_documents(spark, sf_dir).mapInPandas(
+        _derive_clean_batches, schema=SPANS_NORM
+    )
 
 
 def q_triples_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return extract_triples(q_spans_norm(spark, sf_dir))
+    return fused_extract_triples(spark, sf_dir)
 
 
-def q_triples_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics through the Arrow clean+extract kernel, run over
-    the raw (dirty) spans table."""
-    return extract_documents(load_interleaved(spark, sf_dir))
+# kg_triples_pandas_extractor: the contract keeps both names
+q_triples_pandas = q_triples_surface
 
 
 def q_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,13 +65,15 @@ def q_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _top_entities_from_edges(edges: DataFrame, limit: int) -> DataFrame:
+def q_top_entities(spark: SparkSession, sf_dir: str, limit: int = 20) -> DataFrame:
+    """Flagship: most-mentioned canonical concepts over :func:`q_edges`
+    (the clean+extract kernel, then stages 2+3 as the composed single
+    pass, kg.link.link_canonicalize_triples)."""
     # explode both endpoints in ONE pass — a subj/obj unionByName would
     # duplicate the entire upstream extraction DAG
     cnt = (
-        edges.select(
-            F.explode(F.array("subj_id", "obj_id")).alias("entity_id")
-        )
+        q_edges(spark, sf_dir)
+        .select(F.explode(F.array("subj_id", "obj_id")).alias("entity_id"))
         .groupBy("entity_id")
         .agg(F.count("*").alias("n_mentions"))
     )
@@ -80,33 +91,8 @@ def _top_entities_from_edges(edges: DataFrame, limit: int) -> DataFrame:
     return named.orderBy(F.desc("n_mentions"), F.asc("name")).limit(limit)
 
 
-def q_top_entities(spark: SparkSession, sf_dir: str, limit: int = 20) -> DataFrame:
-    """Flagship: most-mentioned canonical concepts — served through the
-    fused Arrow extraction kernel (round-5 VERDICT item 6: the flagship
-    row used to run the native-expression extraction path, which costs
-    3-4x the fused twin in one JVM — interpreted array-HOF extraction is
-    allocation/GC-bound and anti-scales with threads; PLANS.md §2 — for
-    zero correctness gain, since the two paths are output-identical:
-    asserted in tests/test_fused.py and by both queries sharing ONE
-    oracle SQL). The native path remains fully exercised by the
-    kg_triples_surface / kg_linked / kg_edges / kg_nodes driver rows and
-    stays the oracle-parity reference implementation."""
-    return q_top_entities_fused(spark, sf_dir, limit)
-
-
-def q_top_entities_fused(
-    spark: SparkSession, sf_dir: str, limit: int = 20
-) -> DataFrame:
-    """Flagship through the fused Arrow kernel — the at-scale extraction
-    configuration (kg/fused.py); same oracle as kg_top_entities (the two
-    extraction paths are output-identical, asserted in tests/test_fused.py
-    and by this query sharing kg_top_entities' oracle SQL). Stage 2+3 run
-    as the composed single pass (kg.link.link_canonicalize_triples)."""
-    triples = fused_extract_triples(spark, sf_dir)
-    final = link_canonicalize_triples(triples, spark)
-    return _top_entities_from_edges(
-        final.select("subj_id", "pred", "obj_id", "doc_id", "offset"), limit
-    )
+# kg_top_entities_fused: the contract keeps both names
+q_top_entities_fused = q_top_entities
 
 
 # Blocking/component caps ACTIVE in the contract queries (round-2 VERDICT

@@ -9,11 +9,13 @@ spans, and every span where ``(doc_id + span_idx) % 4 == 0`` becomes a
 media span (image/audio/video round-robin) carrying a synthetic
 ``media_ref`` instead of text.
 
-Entirely native array expressions (sequence/slice/transform) — zero
-shuffle, fully whole-stage-codegen, so the derivation itself is free at
-100 TB scale. The identical derivation is expressed in DuckDB SQL in
-``__spark_entry__.oracle_sql`` so every downstream stage is
-oracle-checkable end to end.
+The derivation is one pandas/Arrow kernel, :func:`derive_spans`, run in
+one ``MapInPandas`` behind the scan's spread guard
+(:func:`derived_spans`); the batch pipeline and the stream run the same
+function inside the clean+extract kernel (kg.fused), so flat input crosses
+the Python boundary once, as raw documents. The identical derivation is
+expressed in DuckDB SQL below (``SQL_EXPLODED_SPANS``), so every
+downstream stage is oracle-checkable end to end.
 
 Reference analog: the size-targeted partition cutter
 (``data/scripts/data_processor.py:305-365``) also reshapes a flat record
@@ -23,9 +25,16 @@ rather than physical (files).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from typing import Iterator
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
+
+from kg.normalize import reassemble_spans
+from kg.schemas import SPANS_NORM
 from kg.session import spread_small_scan
 
 WORDS_PER_SPAN = 6
@@ -38,8 +47,8 @@ MEDIA_KINDS = ["image", "audio", "video"]
 # checked — kg_spans_normalize shared kg_spans_raw's oracle and the chain
 # was pinned only by pytest. A deterministic fraction of TEXT spans now
 # carries HTML/LaTeX/URL/email/entity/case/whitespace/accent junk, derived
-# from (doc_id, offset) alone so Spark, the fused Arrow kernel, and DuckDB
-# produce byte-identical raw spans. Every template is constructed so the
+# from (doc_id, offset) alone so the Arrow kernel and DuckDB produce
+# byte-identical raw spans. Every template is constructed so the
 # reference cleaning chain (kg.cleaning; text_cleaner.py:15-127 semantics)
 # recovers EXACTLY the pristine chunk — asserted per-template in
 # tests/test_cleaning.py — so downstream extraction oracles build from the
@@ -54,16 +63,16 @@ N_DIRT_TEMPLATES = 7  # template = ((doc_id + span_idx) // 3) % 7
 # (kg.cleaning._ACCENT_SRC/_DST; reference text_cleaner.py:32-40,65-76),
 # so the fold restores the pristine chunk exactly — this was the one
 # cleaning step (T4 unicode/accent) no driver row ever exercised.
-# translate() is code-point based in all three engines, so the dirty
-# spans stay byte-identical across Spark / pandas / DuckDB.
+# translate() is code-point based in Python and DuckDB, so the dirty
+# spans stay byte-identical across the kernel and the oracle.
 _ACCENT_DIRT_SRC = "aeiou"
 _ACCENT_DIRT_DST = "àéîöù"
 _ACCENT_DIRT_TABLE = str.maketrans(_ACCENT_DIRT_SRC, _ACCENT_DIRT_DST)
 
 
 def plant_dirt_py(doc_num: int, i: int, chunk: str) -> str:
-    """Python mirror of the Spark/DuckDB dirt injection (fused kernel +
-    test reference). Identity for spans outside the dirty selector."""
+    """The dirt injection of :func:`derive_spans` (DuckDB mirror:
+    :func:`sql_dirt`). Identity for spans outside the dirty selector."""
     s = doc_num + i
     if s % DIRT_EVERY != 1:
         return chunk
@@ -84,26 +93,6 @@ def plant_dirt_py(doc_num: int, i: int, chunk: str) -> str:
     return chunk.translate(_ACCENT_DIRT_TABLE)
 
 
-def _dirt_col(doc_num: Column, i: Column, clean: Column) -> Column:
-    """Spark-native mirror of :func:`plant_dirt_py`. The floor-division is
-    exact: (doc_num + i) stays far below 2^53."""
-    s = doc_num + i
-    t = F.floor(s / F.lit(DIRT_EVERY)).cast("long") % N_DIRT_TEMPLATES
-    dirty = (
-        F.when(t == 0, F.concat(F.lit('<p class="x">'), clean, F.lit("</p>")))
-        .when(t == 1, F.concat(F.lit("\\textbf{"), clean, F.lit("} \\\\ \\noindent")))
-        .when(t == 2, F.concat(clean, F.lit(" http://spam.example.com/x?y=1")))
-        .when(t == 3, F.concat(clean, F.lit(" spam.bot@example.com")))
-        .when(t == 4, F.concat(F.lit("&nbsp;&nbsp;"), F.upper(clean)))
-        .when(
-            t == 5,
-            F.concat(F.replace(clean, F.lit(" "), F.lit("  ")), F.lit(" $$")),
-        )
-        .otherwise(F.translate(clean, _ACCENT_DIRT_SRC, _ACCENT_DIRT_DST))
-    )
-    return F.when(s % DIRT_EVERY == 1, dirty).otherwise(clean)
-
-
 def sql_dirt(chunk: str, key: str) -> str:
     """DuckDB mirror of :func:`plant_dirt_py` — ``chunk``/``key`` are SQL
     expressions for the pristine text and (doc_id + offset). DuckDB
@@ -120,86 +109,120 @@ def sql_dirt(chunk: str, key: str) -> str:
       ELSE translate({chunk}, '{_ACCENT_DIRT_SRC}', '{_ACCENT_DIRT_DST}') END"""
 
 
-def _span_struct(doc_num: Column, words: Column, i: Column) -> Column:
-    chunk = F.slice(words, i * WORDS_PER_SPAN + 1, WORDS_PER_SPAN)
-    is_media = (doc_num + i) % MEDIA_EVERY == 0
-    kind = F.when(
-        is_media,
-        F.element_at(F.array(*[F.lit(k) for k in MEDIA_KINDS]), ((doc_num + i) % 3 + 1).cast("int")),
-    ).otherwise(F.lit("text"))
-    media_ref = F.when(
-        is_media, F.concat(F.lit("media://"), kind, F.lit("/"), doc_num, F.lit("-"), i)
-    ).otherwise(F.lit(""))
-    text = F.when(is_media, F.lit("")).otherwise(
-        _dirt_col(doc_num, i, F.array_join(chunk, " "))
-    )
-    return F.struct(
-        kind.alias("kind"),
-        text.alias("text"),
-        media_ref.alias("media_ref"),
-        i.cast("int").alias("offset"),
-    )
+def split_nonempty(texts):
+    """Vectorized ``[w for w in t.split(' ') if w]`` over a string column:
+    one RE2-free Arrow split, then empty tokens dropped by offset
+    arithmetic. Returns (tokens: np.ndarray[object], tokens_arrow: the
+    same values as an Arrow array — kept for hash-based pc.is_in, far
+    faster than sort-based np.isin on object dtype —, starts: int64
+    per-row first-token index, counts: int64 per-row token count)."""
+    arr = pa.array(texts, type=pa.string(), from_pandas=True)
+    split = pc.split_pattern(arr, " ")
+    words = pc.list_flatten(split)
+    row_len = np.asarray(pc.list_value_length(split).cast(pa.int64()))
+    starts_all = np.concatenate(([0], np.cumsum(row_len)))
+    keep_arrow = pc.not_equal(words, "")
+    keep = np.asarray(keep_arrow.to_numpy(zero_copy_only=False), dtype=bool)
+    kcum = np.concatenate(([0], np.cumsum(keep)))
+    counts = kcum[starts_all[1:]] - kcum[starts_all[:-1]]
+    kept_arrow = words.filter(keep_arrow)
+    tokens = kept_arrow.to_numpy(zero_copy_only=False)
+    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
+    return tokens, kept_arrow, starts, counts
 
 
-def interleaved_documents(flat_docs: DataFrame) -> DataFrame:
-    """Flat (doc_id:int64, text) -> interleaved (doc_id:string, spans).
+def derive_spans(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Flat (doc_id:int64, text) frame -> exploded span columns
+    ``doc_id, kind, text, media_ref, offset`` (SPANS_NORM): 6-word
+    spans, media where ``(doc_id + offset) % MEDIA_EVERY == 0``, planted
+    dirt on the selected text spans."""
+    doc_nums = pdf["doc_id"].to_numpy(dtype="int64")
+    doc_ids = np.array(["doc-%07d" % n for n in doc_nums], dtype=object)
+    tokens, _tok_arrow, tok_start, tok_count = split_nonempty(pdf["text"])
 
-    Staged through non-colliding intermediate names (_doc_num/_words): the
-    output column is also called ``doc_id``, and a same-name alias inside
-    one projection can be rewired into the span lambda when Catalyst
-    collapses projections.
-    """
-    staged = flat_docs.select(
-        F.col("doc_id").cast("long").alias("_doc_num"),
-        F.filter(F.split(F.col("text"), " "), lambda w: w != F.lit("")).alias("_words"),
+    n_spans = (tok_count + WORDS_PER_SPAN - 1) // WORDS_PER_SPAN
+    total = int(n_spans.sum())
+    doc_idx = np.repeat(np.arange(len(doc_nums)), n_spans)
+    span_i = np.arange(total) - np.repeat(np.cumsum(n_spans) - n_spans, n_spans)
+    s_key = doc_nums[doc_idx] + span_i
+    is_media = (s_key % MEDIA_EVERY) == 0
+    is_text = ~is_media
+
+    kind = np.full(total, "text", dtype=object)
+    m_kinds = np.array(MEDIA_KINDS, dtype=object)[s_key[is_media] % 3]
+    kind[is_media] = m_kinds
+    media_ref = np.full(total, "", dtype=object)
+    media_ref[is_media] = np.array(
+        [
+            f"media://{k}/{n}-{i}"
+            for k, n, i in zip(
+                m_kinds, doc_nums[doc_idx[is_media]], span_i[is_media]
+            )
+        ],
+        dtype=object,
     )
-    doc_num = F.col("_doc_num")
-    words = F.col("_words")
-    n_spans = F.ceil(F.size(words) / F.lit(WORDS_PER_SPAN)).cast("long")
-    spans = F.when(
-        n_spans > 0,
-        F.transform(
-            F.sequence(F.lit(0).cast("long"), n_spans - 1),
-            lambda i: _span_struct(doc_num, words, i),
-        ),
-    ).otherwise(F.array().cast("array<struct<kind:string,text:string,media_ref:string,offset:int>>"))
-    return staged.select(
-        F.format_string("doc-%07d", doc_num).alias("doc_id"),
-        spans.alias("spans"),
+
+    # text spans: raw chunks carry the planted dirt
+    t_doc = doc_idx[is_text]
+    t_i = span_i[is_text]
+    tok_list = tokens.tolist()  # list slicing is ~2x numpy fancy-index
+    a = (tok_start[t_doc] + t_i * WORDS_PER_SPAN).tolist()
+    b = np.minimum(
+        tok_start[t_doc] + (t_i + 1) * WORDS_PER_SPAN,
+        tok_start[t_doc] + tok_count[t_doc],
+    ).tolist()
+    text = np.full(total, "", dtype=object)
+    text[is_text] = np.array(
+        [
+            plant_dirt_py(n, i, " ".join(tok_list[lo:hi]))
+            for n, i, lo, hi in zip(doc_nums[t_doc].tolist(), t_i.tolist(), a, b)
+        ],
+        dtype=object,
+    )
+    return pd.DataFrame(
+        {
+            "doc_id": doc_ids[doc_idx],
+            "kind": kind,
+            "text": text,
+            "media_ref": media_ref,
+            "offset": span_i.astype("int32"),
+        }
     )
 
 
 REPLICA_STRIDE = 100_000  # doc-%07d supports up to 100 replicas of ids < 1e5
 
 
-def load_interleaved(
-    spark: SparkSession, sf_dir: str, replicate: int = 1
-) -> DataFrame:
-    """Read the driver's flat documents table and derive the spans table.
+def scan_flat_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flat ``(doc_id, text)`` documents table behind the small-input
+    spread guard (kg.session.spread_small_scan)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    return spread_small_scan(spark, docs)
 
-    ``replicate > 1`` tiles the corpus deterministically (replica r shifts
-    doc ids by ``r * REPLICA_STRIDE``) — used by the scaling bench to make
-    the job compute-bound at local[N] so parallel efficiency is measurable;
-    semantics per document are unchanged.
-    """
-    # Spread BEFORE the replicate crossJoin so only the base corpus is
-    # shuffled, not the tiled payload (guide §2.3 — shuffle fewer bytes;
-    # each base partition fans out to `replicate` equal outputs, so the
-    # balance is identical).
-    flat = spread_small_scan(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    if replicate > 1:
-        reps = spark.range(replicate).select(F.col("id").alias("_rep"))
-        flat = flat.crossJoin(F.broadcast(reps)).select(
-            (F.col("doc_id") + F.col("_rep") * REPLICA_STRIDE).alias("doc_id"),
-            "text",
-        )
-    return interleaved_documents(flat)
+
+def _derive_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        yield derive_spans(pdf)
+
+
+def derived_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The raw exploded spans (SPANS_NORM, dirt included) of the flat
+    documents table: one ``MapInPandas`` of :func:`derive_spans`."""
+    return scan_flat_documents(spark, sf_dir).mapInPandas(
+        _derive_batches, schema=SPANS_NORM
+    )
+
+
+def load_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``(doc_id, spans)`` table derived from the flat documents:
+    :func:`derived_spans` re-nested by offset."""
+    return reassemble_spans(derived_spans(spark, sf_dir))
 
 
 # DuckDB SQL fragments producing the *exploded* spans (doc_id, kind, text,
 # media_ref, offset) from the registered `documents` view — the oracle
-# mirror of interleaved_documents() followed by posexplode. Kept here so
-# all derivation constants live in one module.
+# mirror of derived_spans(). Kept here so all derivation constants live in
+# one module.
 #
 # Two variants sharing one body:
 # * SQL_EXPLODED_SPANS — the RAW spans (WITH planted dirt): oracle for

@@ -1,11 +1,10 @@
-"""Cleaning kernel: dirty fixtures through both paths (reference test analog:
-``data/scripts/test_pipeline.py:17-43`` — LaTeX content survives, HTML
-stripped, no double spaces)."""
+"""Cleaning kernel: dirty fixtures through the Arrow kernel and its DuckDB
+mirror (reference test analog: ``data/scripts/test_pipeline.py:17-43`` —
+LaTeX content survives, HTML stripped, no double spaces)."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from kg.cleaning import clean_text_col, clean_text_pandas, sql_clean_text
+from kg.cleaning import clean_text_pandas, sql_clean_text
 
 DIRTY = [
     r"\textbf{Table} scan of $n^2$ rows",
@@ -32,13 +31,7 @@ def _expected():
     ]
 
 
-def test_native_chain(spark):
-    df = spark.createDataFrame([(s,) for s in DIRTY], "t string")
-    got = [r.c for r in df.select(clean_text_col(F.col("t")).alias("c")).collect()]
-    assert got == _expected()
-
-
-def test_pandas_chain_matches_native(spark):
+def test_pandas_chain():
     got_pd = clean_text_pandas(pd.Series(DIRTY)).tolist()
     assert got_pd == _expected()
 
@@ -59,30 +52,26 @@ ACCENTED = [
 ]
 
 
-def test_three_way_equality_on_accented_input(spark, duck):
-    """Native / pandas / DuckDB cleaning agree on non-ASCII input — the
-    round-1 NFKD asymmetry regression test (accents fold via one shared
-    fixed translate table in all three paths)."""
-    df = spark.createDataFrame([(s,) for s in ACCENTED], "t string")
-    native = [
-        r.c for r in df.select(clean_text_col(F.col("t")).alias("c")).collect()
-    ]
+def test_three_way_equality_on_accented_input(duck):
+    """The kernel and DuckDB cleaning agree on non-ASCII input — the NFKD
+    asymmetry regression test (accents fold via one shared fixed
+    translate table in both)."""
     pandas_ = clean_text_pandas(pd.Series(ACCENTED)).tolist()
     vals = ", ".join("('" + s.replace("'", "''") + "')" for s in ACCENTED)
     q = f"SELECT {sql_clean_text('t')} AS c FROM (VALUES {vals}) v(t)"
     sql = [r[0] for r in duck.sql(q).fetchall()]
-    assert native == pandas_ == sql
+    assert pandas_ == sql
     # and the fold actually happened (not a vacuous pass-through)
-    assert native[0] == 'cafe creme & naive facade'
-    assert "ł" in native[1] and "ø" in native[1]  # unmapped chars preserved
+    assert pandas_[0] == 'cafe creme & naive facade'
+    assert "ł" in pandas_[1] and "ø" in pandas_[1]  # unmapped chars preserved
 
 
-def test_dirt_templates_clean_back_to_pristine(spark, duck):
+def test_dirt_templates_clean_back_to_pristine(duck):
     """Every planted-dirt template (kg.synth) must (a) actually change the
-    text and (b) clean back to EXACTLY the pristine chunk through all
-    three paths — this is the invariant that lets downstream extraction
-    oracles build on the pristine span derivation while Spark runs
-    dirty -> clean -> extract."""
+    text and (b) clean back to EXACTLY the pristine chunk through the
+    kernel and through DuckDB — this is the invariant that lets
+    downstream extraction oracles build on the pristine span derivation
+    while the kernel runs dirty -> clean -> extract."""
     from kg.synth import DIRT_EVERY, N_DIRT_TEMPLATES, plant_dirt_py, sql_dirt
 
     chunk = "table scan merge part window small"
@@ -97,10 +86,6 @@ def test_dirt_templates_clean_back_to_pristine(spark, duck):
     assert all(d != chunk for d in dirty)
     # pandas path
     assert clean_text_pandas(pd.Series(dirty)).tolist() == [chunk] * len(dirty)
-    # native path
-    df = spark.createDataFrame([(d,) for d in dirty], "t string")
-    got = [r.c for r in df.select(clean_text_col(F.col("t")).alias("c")).collect()]
-    assert got == [chunk] * len(dirty)
     # DuckDB path: dirt generated AND cleaned in SQL
     for s, d in cases:
         q = "'" + chunk + "'"
@@ -112,10 +97,10 @@ def test_dirt_templates_clean_back_to_pristine(spark, duck):
         assert cleaned == chunk
 
 
-def test_idempotent_on_clean_corpus(spark):
+def test_idempotent_on_clean_corpus():
     """On the synthetic corpus, cleaning must be identity (oracle contract)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    changed = docs.select(
-        (clean_text_col(F.col("text")) != F.trim(F.col("text"))).alias("diff")
-    ).filter("diff")
-    assert changed.count() == 0
+    text = pd.read_parquet(
+        "/root/testdata/sf0.001/documents.parquet", columns=["text"]
+    )["text"]
+    changed = clean_text_pandas(text) != text.str.strip(" ")
+    assert not changed.any()

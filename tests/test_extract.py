@@ -1,10 +1,8 @@
-"""Extraction semantics: hand cases and DuckDB parity for both stage-1
-implementations — the native HOF chain and the Arrow clean+extract kernel
-over the spans table (kg.fused.extract_documents)."""
+"""Extraction semantics of the Arrow clean+extract kernel
+(kg.fused.extract_documents over a spans table): hand cases against their
+literal expected rows, and the stage-1 contract query against DuckDB."""
 
-from kg.extract import extract_triples
 from kg.fused import extract_documents
-from kg.normalize import normalize_spans
 from kg.oracles import triples_surface_sql
 from kg import queries as Q
 from kg.schemas import DOCUMENTS
@@ -19,22 +17,10 @@ def _mk_docs(spark, spans_by_doc):
     return spark.createDataFrame(rows, DOCUMENTS)
 
 
-def _rows(df):
-    return {
-        (r.doc_id, r.offset, r.subj_surface, r.pred, r.obj_surface, r.subj_pos, r.obj_pos)
-        for r in df.collect()
-    }
-
-
 def _triples(spark, spans_by_doc):
-    """The hand case through the native chain and through the kernel;
-    both must give the same rows, which are returned for the case's own
-    assertion."""
-    docs = _mk_docs(spark, spans_by_doc)
-    native = _rows(extract_triples(normalize_spans(docs)))
-    kernel = _rows(extract_documents(docs))
-    assert native == kernel, (native, kernel)
-    return native
+    """TRIPLES_SURFACE rows (doc_id, offset, subj, pred, obj, subj_pos,
+    obj_pos) of one hand case."""
+    return {tuple(r) for r in extract_documents(_mk_docs(spark, spans_by_doc)).collect()}
 
 
 def test_adjacent_mentions_with_predicate(spark):
@@ -78,10 +64,7 @@ def test_media_span_triple(spark):
 
 
 def test_matches_duckdb_oracle(spark, duck):
+    """kg_triples_surface (and kg_triples_pandas_extractor, the same
+    function): the kernel over the raw, dirty corpus against the oracle."""
+    assert Q.q_triples_pandas is Q.q_triples_surface
     assert_df_equal(Q.q_triples_surface(spark, SF_DIR), duck.sql(triples_surface_sql()))
-
-
-def test_kernel_matches_duckdb_oracle(spark, duck):
-    """kg_triples_pandas_extractor: the kernel over the raw, dirty spans
-    (cleaning included) against the same oracle."""
-    assert_df_equal(Q.q_triples_pandas(spark, SF_DIR), duck.sql(triples_surface_sql()))

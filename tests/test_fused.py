@@ -1,14 +1,17 @@
-"""Fused Arrow kernel: exact equality with the stagewise paths + oracle."""
+"""Fused Arrow kernel: the flat and spans-table adapters agree, and both
+equal the oracle."""
 
-from kg.fused import fused_extract_triples
+from kg.fused import extract_documents, fused_extract_triples
 from kg.oracles import nodes_sql, triples_surface_sql
-from kg.queries import q_triples_surface
+from kg.synth import load_interleaved
 from tests.conftest import SF_DIR, assert_df_equal
 
 
 def test_fused_equals_stagewise(spark):
+    """Flat documents derived inside the kernel == the derived spans table
+    re-nested, then exploded and extracted."""
     a = fused_extract_triples(spark, SF_DIR)
-    b = q_triples_surface(spark, SF_DIR)
+    b = extract_documents(load_interleaved(spark, SF_DIR))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -50,9 +53,7 @@ def test_kernel_side_tiling_equals_crossjoin_tiling(spark):
     the row multiset must equal the JVM crossJoin tiling it replaced."""
     from pyspark.sql import functions as F
 
-    from kg.fused import extract_documents, fused_extract_triples
     from kg.synth import REPLICA_STRIDE
-    from tests.conftest import SF_DIR
 
     new = fused_extract_triples(spark, SF_DIR, replicate=3)
     base = (

@@ -3,18 +3,20 @@ two-stage reference chain, salted-join equivalence under skew."""
 
 from pyspark.sql import functions as F
 
-from kg.extract import extract_triples
+from kg.fused import extract_documents
 from kg.ids import py_id64
 from kg.link import alias_dict, link_triples, salted_join
-from kg.normalize import normalize_spans
 from kg.oracles import linked_sql
-from kg.synth import load_interleaved
 from tests.conftest import SF_DIR, assert_df_equal
 
 
+def _triples(spark):
+    """TRIPLES_SURFACE of the test corpus through the clean+extract kernel."""
+    return extract_documents(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+
+
 def test_linked_matches_duckdb(spark, duck):
-    docs = load_interleaved(spark, SF_DIR)
-    linked = link_triples(extract_triples(normalize_spans(docs)), alias_dict(spark))
+    linked = link_triples(_triples(spark), alias_dict(spark))
     assert_df_equal(linked, duck.sql(linked_sql()))
 
 
@@ -113,8 +115,7 @@ def test_link_canonicalize_composed_equals_two_stage(spark):
     from kg.canonicalize import canonical_map, canonicalize_triples
     from kg.link import link_canonicalize_triples
 
-    docs = load_interleaved(spark, SF_DIR)
-    triples = extract_triples(normalize_spans(docs))
+    triples = _triples(spark)
     two_stage = canonicalize_triples(
         link_triples(triples, alias_dict(spark)), canonical_map(spark)
     )
@@ -132,7 +133,7 @@ def test_corpus_map_link_equals_two_stage(spark):
     from kg.canonicalize import canonical_map_from_corpus, canonicalize_triples
     from kg.link import link_canonicalize_triples
 
-    triples = extract_triples(normalize_spans(load_interleaved(spark, SF_DIR)))
+    triples = _triples(spark)
     surfaces = triples.filter(F.col("subj_pos") >= 0).select(
         F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
     )

@@ -1,7 +1,6 @@
 """End-to-end: P/R gate vs oracle, span-sequence invariant, resume-after-kill."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from kg.materialize import InjectedFailure
 from kg.normalize import normalize_spans, reassemble_spans
@@ -57,33 +56,26 @@ def test_stage_query_matches_oracle(spark, duck, fn, sql):
     assert_df_equal(fn(spark, SF_DIR), duck.sql(sql))
 
 
-def test_span_sequence_invariant(spark):
+def test_span_sequence_invariant(spark, duck):
     """(kind, text, media_ref, order) per doc survives explode+normalize:
     the round trip equals the input with text spans CLEANED in place (the
-    corpus carries planted dirt since round 4, so cleaning is no longer an
-    identity — kind/media_ref/order must still be untouched)."""
-    from kg.cleaning import clean_text_col
+    corpus carries planted dirt, so cleaning is no longer an identity —
+    kind/media_ref/order must still be untouched). The expected side is
+    the oracle's pristine derivation, nested by offset."""
+    from kg.synth import SQL_EXPLODED_SPANS_CLEAN
 
+    expected = {}
+    for doc_id, kind, text, media_ref, offset in duck.sql(
+        SQL_EXPLODED_SPANS_CLEAN + ' ORDER BY doc_id, "offset"'
+    ).fetchall():
+        expected.setdefault(doc_id, []).append((kind, text, media_ref, offset))
     docs = load_interleaved(spark, SF_DIR)
-    expected = docs.select(
-        "doc_id",
-        F.transform(
-            "spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                F.when(s["kind"] == "text", clean_text_col(s["text"]))
-                .otherwise(s["text"])
-                .alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ).alias("spans"),
-    )
-    round_trip = reassemble_spans(normalize_spans(docs))
-    diff = expected.join(round_trip.withColumnRenamed("spans", "spans2"), "doc_id")
-    bad = diff.filter(F.col("spans") != F.col("spans2"))
-    assert bad.count() == 0
-    assert round_trip.count() == docs.count()
+    round_trip = {
+        r.doc_id: [tuple(s) for s in r.spans]
+        for r in reassemble_spans(normalize_spans(docs)).collect()
+    }
+    assert round_trip == expected
+    assert len(round_trip) == docs.count()
 
 
 def test_resume_after_kill_produces_identical_output(spark, tmp_path):

@@ -301,16 +301,27 @@ def test_fused_triples_plan_one_kernel_one_exchange(spark, tmp_path):
     """Both input forms reach the clean+extract kernel through ONE
     MapInPandas behind the one spread exchange: flat docs are derived
     into spans inside the kernel's Python call, and a spans table is
-    exploded natively — neither adds a boundary crossing or a shuffle."""
+    exploded natively — neither adds a boundary crossing or a shuffle.
+    The stagewise contract queries (raw spans, cleaned spans, triples)
+    plan the same way over the flat table."""
+    from kg import queries as Q
     from kg.fused import fused_extract_triples
     from kg.synth import load_interleaved
 
     spans_dir = str(tmp_path)
     load_interleaved(spark, SF_DIR).write.parquet(f"{spans_dir}/documents.parquet")
-    for sf_dir in (SF_DIR, spans_dir):
-        p = _plan(fused_extract_triples(spark, sf_dir))
-        assert p.count("MapInPandas") == 1, p
-        assert p.count("Exchange") == 1, p
+    plans = {
+        "flat": fused_extract_triples(spark, SF_DIR),
+        "spans": fused_extract_triples(spark, spans_dir),
+        "q_spans": Q.q_spans(spark, SF_DIR),
+        "q_spans_norm": Q.q_spans_norm(spark, SF_DIR),
+        "q_triples_surface": Q.q_triples_surface(spark, SF_DIR),
+    }
+    for name, df in plans.items():
+        p = _plan(df)
+        assert p.count("MapInPandas") == 1, (name, p)
+        assert p.count("FileScan") == 1, (name, p)
+        assert p.count("Exchange") == 1, (name, p)
 
 
 def test_streaming_triples_plan_one_kernel_no_repartition(spark, tmp_path):
@@ -338,10 +349,9 @@ def test_nodes_plan_one_aggregation_no_python_scan(spark):
     """The nodes table is ONE groupBy over the exploded edge endpoints
     unioned with the concept rows: one hash exchange, no broadcast join,
     and the concepts enter as a JVM-local relation, not a Python-backed
-    ``Scan ExistingRDD``. Below the edges the native extraction chain
-    reads the documents once: one ``FileScan`` behind its one
-    round-robin spread (a text branch unioned with a media branch would
-    plan two of each)."""
+    ``Scan ExistingRDD``. Below the edges the clean+extract kernel reads
+    the documents once: one ``FileScan`` behind its one round-robin
+    spread."""
     import re
 
     from kg.queries import q_nodes

@@ -8,9 +8,8 @@ import string
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from kg.cleaning import clean_text_col, clean_text_pandas
+from kg.cleaning import clean_text_pandas, sql_clean_text
 from kg.fused import clean_extract
 from kg.vocab import DEFAULT_PRED, ENTITY_SURFACES, PREDICATES
 
@@ -19,11 +18,6 @@ _dirty = st.text(
     alphabet=string.ascii_letters + string.digits + " .$\\{}<>&_^#@/:-'\"",
     max_size=120,
 )
-
-
-def _spark_clean(spark, texts):
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    return [r.c for r in df.select(clean_text_col(F.col("t")).alias("c")).collect()]
 
 
 def test_pandas_clean_is_idempotent():
@@ -49,8 +43,11 @@ def test_clean_output_has_no_double_spaces_or_tags():
     prop()
 
 
-def test_spark_and_pandas_cleaning_agree(spark):
-    # one batched cross-engine comparison over many hypothesis examples
+def test_spark_and_pandas_cleaning_agree():
+    """The kernel's cleaning against its DuckDB mirror (the oracles'
+    cleaning) in one batched comparison over many hypothesis examples."""
+    import duckdb
+
     examples = []
 
     @given(st.lists(_dirty, min_size=1, max_size=50))
@@ -59,11 +56,13 @@ def test_spark_and_pandas_cleaning_agree(spark):
         examples.extend(texts)
 
     collect()
-    # NFKD folding (pandas-only) can differ on exotic unicode; the
-    # strategy alphabet is ASCII so both paths must agree exactly
     got_pd = clean_text_pandas(pd.Series(examples)).tolist()
-    got_sp = _spark_clean(spark, examples)
-    assert got_pd == got_sp
+    con = duckdb.connect()
+    con.register("ex", pd.DataFrame({"i": range(len(examples)), "t": examples}))
+    got_sql = [
+        r[0] for r in con.sql(f"SELECT {sql_clean_text('t')} FROM ex ORDER BY i").fetchall()
+    ]
+    assert got_pd == got_sql
 
 
 _tokens = st.lists(
