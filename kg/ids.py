@@ -22,6 +22,12 @@ def id64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def spark_sql_id64(expr: str) -> str:
+    """Spark SQL text of :func:`id64` over an expression string (for
+    ``selectExpr`` projections built driver-side)."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def py_id64(s: str) -> int:
     """Python mirror of :func:`id64` (for oracles/fixtures)."""
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg.ids import id64
+from kg.ids import id64, spark_sql_id64
 from kg.session import local_frame
 from kg.vocab import ENTITY_KIND, alias_pairs
 
@@ -78,56 +78,82 @@ def _composed_link_rows() -> list[tuple[str, int]]:
     return sorted(rows)
 
 
-def composed_link_expr() -> Column:
-    """The composed surface->canonical_id map as a LITERAL map Column.
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal (the parser reads backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def composed_link_expr(rows: list[tuple[str, int]]) -> str:
+    """The composed ``(surface, final_id)`` rows as a LITERAL map, in
+    Spark SQL.
 
     The map is static vocabulary config (19 entries), so the lookup is a
     constant-folded expression in the same codegen stage as the
     extraction output: no broadcast exchange, no join operator, no
     per-query broadcast-build latency (guide §3 — broadcast the side
     that fits; a side that is literal config folds away entirely).
-    Keys are unique (alias_pairs() iterates a set of surfaces). Misses
-    read as null, which needs Spark >= 3.4 under ANSI mode (older
-    versions raise MAP_KEY_DOES_NOT_EXIST)."""
-    rows = _composed_link_rows()
-    return F.create_map(*[part for s, fid in rows for part in (F.lit(s), F.lit(fid))])
+    Misses read as null, which needs Spark >= 3.4 under ANSI mode (older
+    versions raise MAP_KEY_DOES_NOT_EXIST). A surface that two rows
+    share raises ``ValueError`` here: under the default
+    ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` the map would otherwise
+    fail mid-query."""
+    seen: set[str] = set()
+    for s, _ in rows:
+        if s in seen:
+            raise ValueError(f"composed_link_expr: duplicate surface {s!r}")
+        seen.add(s)
+    return "map(" + ", ".join(f"{_sql_str(s)}, {fid}L" for s, fid in rows) + ")"
 
 
-def _finalize_linked(
-    triples_surface: DataFrame, subj_fid: Column, obj_fid: Column
-) -> DataFrame:
-    """Shared output projection of stage 2 (+3): ``subj_fid``/``obj_fid``
-    are the lookup columns (a joined ``_*_fid`` column or a literal-map
-    ``GetMapValue``), null when the surface is out of dictionary — the
-    fallback/media branches are identical either way."""
-    is_mention = F.col("subj_pos") >= 0
-    return triples_surface.select(
-        "doc_id",
-        "offset",
-        F.when(
-            is_mention,
-            F.coalesce(
-                subj_fid, id64(F.concat(F.lit("ent:"), F.col("subj_surface")))
-            ),
-        )
-        .otherwise(id64(F.concat(F.lit("doc:"), F.col("doc_id"))))
-        .alias("subj_id"),
-        F.when(is_mention, F.lit(ENTITY_KIND))
-        .otherwise(F.lit("document"))
-        .alias("subj_kind"),
-        "pred",
-        F.when(
-            is_mention,
-            F.coalesce(
-                obj_fid, id64(F.concat(F.lit("ent:"), F.col("obj_surface")))
-            ),
-        )
-        .otherwise(id64(F.col("obj_surface")))
-        .alias("obj_id"),
-        F.when(is_mention, F.lit(ENTITY_KIND))
-        .otherwise(F.lit("media"))
-        .alias("obj_kind"),
-    )
+EDGE_COLS = ("subj_id", "pred", "obj_id", "doc_id", "offset")
+
+
+def _link_projection(subj_fid: str, obj_fid: str) -> dict[str, str]:
+    """Shared output projection of stage 2 (+3), output name -> Spark SQL:
+    ``subj_fid``/``obj_fid`` are the lookup expressions (a joined
+    ``_*_fid`` column or a literal-map lookup), null when the surface is
+    out of dictionary — the fallback/media branches are identical either
+    way. Built from strings because the same projection built from
+    Column objects costs ~570 py4j calls per plan, and the stream plans
+    it at every query start."""
+
+    def ent(col: str) -> str:
+        return spark_sql_id64(f"concat('ent:', `{col}`)")
+
+    mention = "`subj_pos` >= 0"
+    entity = _sql_str(ENTITY_KIND)
+    doc_node = spark_sql_id64("concat('doc:', `doc_id`)")
+    media_node = spark_sql_id64("`obj_surface`")
+    return {
+        "doc_id": "`doc_id`",
+        "offset": "`offset`",
+        "subj_id": f"CASE WHEN {mention} THEN coalesce({subj_fid}, "
+        f"{ent('subj_surface')}) ELSE {doc_node} END",
+        "subj_kind": f"CASE WHEN {mention} THEN {entity} ELSE 'document' END",
+        "pred": "`pred`",
+        "obj_id": f"CASE WHEN {mention} THEN coalesce({obj_fid}, "
+        f"{ent('obj_surface')}) ELSE {media_node} END",
+        "obj_kind": f"CASE WHEN {mention} THEN {entity} ELSE 'media' END",
+    }
+
+
+def _dict_link_columns(spark: SparkSession) -> dict[str, Column]:
+    """Dictionary-mode projection, parsed once and memoized per session
+    like :func:`alias_dict`: the vocabulary is static, so every plan
+    (batch build, each stream start) selects the same Columns. A
+    ``selectExpr`` re-parses the strings on every call, which was half
+    the ~17 ms it took to plan the projection on a stream."""
+    cached = getattr(spark, "_kg_link_columns", None)
+    if cached is not None:
+        return cached
+    m = composed_link_expr(_composed_link_rows())
+    proj = _link_projection(f"{m}[`subj_surface`]", f"{m}[`obj_surface`]")
+    cols = {name: F.expr(e).alias(name) for name, e in proj.items()}
+    try:
+        spark._kg_link_columns = cols
+    except AttributeError:  # exotic session proxies: just skip the memo
+        pass
+    return cols
 
 
 def _link_via(triples_surface: DataFrame, lookup: DataFrame) -> DataFrame:
@@ -151,7 +177,8 @@ def _link_via(triples_surface: DataFrame, lookup: DataFrame) -> DataFrame:
         "obj_surface",
         "left",
     )
-    return _finalize_linked(joined, F.col("_subj_fid"), F.col("_obj_fid"))
+    proj = _link_projection("`_subj_fid`", "`_obj_fid`")
+    return joined.selectExpr(*(f"{e} AS `{name}`" for name, e in proj.items()))
 
 
 def link_canonicalize_triples(
@@ -176,11 +203,17 @@ def link_canonicalize_triples(
 
     Both equivalences are asserted in tests/test_link.py."""
     if canon is None:
-        m = composed_link_expr()
-        return _finalize_linked(
-            triples_surface, m[F.col("subj_surface")], m[F.col("obj_surface")]
-        )
+        return triples_surface.select(*_dict_link_columns(spark).values())
     return _link_via(triples_surface, canon.select("surface", "canonical_id"))
+
+
+def link_canonicalize_edges(triples_surface: DataFrame, spark: SparkSession) -> DataFrame:
+    """Dictionary-mode :func:`link_canonicalize_triples` projected straight
+    to the five :data:`EDGE_COLS` in ONE select (the edges the stream and
+    ``q_edges`` write). Each select on a streaming plan costs an analysis
+    pass, ~7 ms at every stream start."""
+    cols = _dict_link_columns(spark)
+    return triples_surface.select(*(cols[c] for c in EDGE_COLS))
 
 
 def link_triples(triples_surface: DataFrame, aliases: DataFrame) -> DataFrame:

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from kg.canonicalize import canonical_concept_rows, canonical_concepts, canonical_map
 from kg.fused import fused_extract_triples
-from kg.link import alias_dict, link_canonicalize_triples, link_triples
+from kg.link import alias_dict, link_canonicalize_edges, link_triples
 from kg.materialize import build_nodes_from_edges
 from kg.normalize import clean_spans
 from kg.schemas import SPANS_NORM
@@ -55,8 +55,7 @@ def q_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    final = link_canonicalize_triples(q_triples_surface(spark, sf_dir), spark)
-    return final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
+    return link_canonicalize_edges(q_triples_surface(spark, sf_dir), spark)
 
 
 def q_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,7 +67,7 @@ def q_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_entities(spark: SparkSession, sf_dir: str, limit: int = 20) -> DataFrame:
     """Flagship: most-mentioned canonical concepts over :func:`q_edges`
     (the clean+extract kernel, then stages 2+3 as the composed single
-    pass, kg.link.link_canonicalize_triples)."""
+    pass, kg.link.link_canonicalize_edges)."""
     # explode both endpoints in ONE pass — a subj/obj unionByName would
     # duplicate the entire upstream extraction DAG
     cnt = (

@@ -8,10 +8,13 @@ latency window (``api/main.py:66-77``). Spark-first upgrades:
 * :func:`stream_kg_edges` — file-source ``readStream`` over document
   parquet dropped into a directory, flat or a ``(doc_id, spans)`` table
   (the schema comes from the files); the batch pipeline's extraction plan
-  (kg.fused.extract_documents) and link+canonicalize pass run per
-  micro-batch, appending edges with a checkpoint — kill/restart resumes
-  from the last committed batch, the streaming twin of the batch
-  manifest.
+  (kg.fused.extract_documents) and link+canonicalize projection run in
+  the streaming plan itself, and Spark's parquet file sink writes the
+  edges with a checkpoint. Kill/restart resumes from the last committed
+  batch, and the sink's ``_spark_metadata`` log (keyed on batch id) makes
+  the output exactly-once for Spark readers, replayed batches included —
+  the streaming twin of the batch manifest. Nodes are built in batch
+  only.
 * :func:`windowed_event_counts` — event-time tumbling window with a
   watermark for late data over the events stream (reference's rolling
   mean, done properly with event time instead of arrival order).
@@ -22,6 +25,8 @@ pipeline's edges.
 """
 
 from __future__ import annotations
+
+import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,37 +39,54 @@ def stream_kg_edges(
     out_dir: str,
     checkpoint_dir: str,
 ):
-    """Incremental KG construction: the FULL pipeline per micro-batch —
-    the batch extraction plan (kg.fused.extract_documents) on the stream,
-    then linking + canonicalization + edges append inside
-    ``foreachBatch``.
+    """Incremental KG construction as ONE streaming plan: the batch
+    extraction plan (kg.fused.extract_documents) on the document stream,
+    then the batch pipeline's link+canonicalize projection
+    (kg.link.link_canonicalize_edges, dictionary mode), written by
+    Spark's parquet file sink. No Python runs on the driver per
+    micro-batch.
 
     ``in_dir`` may hold flat documents or a ``(doc_id, spans)`` table:
     the schema comes from its files (:func:`_document_stream`), and an
     empty ``in_dir`` raises ``ValueError`` before any query starts.
 
-    Linking + canonicalization is the batch pipeline's single pass
-    (kg.link.link_canonicalize_triples), so stream output == batch output
-    on the same corpus (asserted in tests). Restarting with the same
-    checkpoint skips committed micro-batches; the canonical map is
-    session-stable (dictionary closure), so late batches canonicalize
-    identically — the streaming analog of lineage-pinned resume.
+    Output: ``out_dir`` is a flat parquet directory of the five edge
+    columns, ``kg.link.EDGE_COLS`` (no nodes: nodes are built in batch
+    only, by ``run_pipeline``). The sink logs each micro-batch's files under
+    ``out_dir/_spark_metadata``, keyed on the batch id, and skips a batch
+    the log already holds. So Spark readers (``spark.read.parquet``) see
+    every batch exactly once, and so does a batch replayed after a crash
+    between the sink's commit and the checkpoint's offset commit. The
+    files of a batch killed mid-write stay in ``out_dir``: Spark readers
+    skip them, but a raw ``out_dir/*.parquet`` glob (pyarrow, DuckDB)
+    sees them. One ``out_dir`` belongs to one ``checkpoint_dir``: a fresh
+    checkpoint restarts at batch 0, which the log would skip. An
+    ``out_dir`` with parquet files but no ``_spark_metadata`` (an append
+    sink's output) raises ``ValueError`` before any query starts: the log
+    would hide those files from Spark readers.
+
+    Restarting with the same checkpoint skips committed micro-batches;
+    the canonical map is session-stable (dictionary closure), so late
+    batches canonicalize identically, and stream output == batch output
+    on the same corpus (asserted in tests).
     """
     from kg.fused import extract_documents
-    from kg.link import link_canonicalize_triples
+    from kg.link import link_canonicalize_edges
 
-    triples = extract_documents(_document_stream(spark, in_dir))
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        final = link_canonicalize_triples(batch_df, spark)
-        (
-            final.select("subj_id", "pred", "obj_id", "doc_id", "offset")
-            .write.mode("append")
-            .parquet(out_dir)
+    if (
+        os.path.isdir(out_dir)
+        and not os.path.isdir(os.path.join(out_dir, "_spark_metadata"))
+        and any(f.endswith(".parquet") for f in os.listdir(out_dir))
+    ):
+        raise ValueError(
+            f"stream_kg_edges: {out_dir!r} holds parquet files but no "
+            "_spark_metadata log; write the stream to a new directory"
         )
-
+    docs = _document_stream(spark, in_dir)
     return (
-        triples.writeStream.foreachBatch(_sink)
+        link_canonicalize_edges(extract_documents(docs), spark)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -1,11 +1,12 @@
 """Linking: dictionary resolution, the composed stage-2+3 pass against the
 two-stage reference chain, salted-join equivalence under skew."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kg.fused import extract_documents
 from kg.ids import py_id64
-from kg.link import alias_dict, link_triples, salted_join
+from kg.link import alias_dict, composed_link_expr, link_triples, salted_join
 from kg.oracles import linked_sql
 from tests.conftest import SF_DIR, assert_df_equal
 
@@ -149,3 +150,13 @@ def test_corpus_map_link_equals_two_stage(spark):
     assert single.columns == two_stage.columns
     assert single.exceptAll(two_stage).count() == 0
     assert two_stage.exceptAll(single).count() == 0
+
+
+def test_composed_link_expr_rejects_duplicate_surface(spark):
+    """Two composed rows with one surface fail when the map is built,
+    naming the surface, instead of mid-query in ``create_map``; quotes
+    and backslashes in a surface survive Spark's SQL parser."""
+    with pytest.raises(ValueError, match="'data'"):
+        composed_link_expr([("data", 1), ("model", 2), ("data", 3)])
+    rows = [("it's", 7), ("a\\b", 8)]
+    assert spark.range(1).selectExpr(f"{composed_link_expr(rows)} AS m").first().m == dict(rows)

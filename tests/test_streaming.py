@@ -1,5 +1,8 @@
-"""Structured Streaming: incremental ingest equals batch; checkpoint resume."""
+"""Structured Streaming: incremental ingest equals batch; checkpoint
+resume; a replayed micro-batch is written once."""
 
+import glob
+import os
 import re
 
 import pytest
@@ -24,14 +27,32 @@ def _assert_same_rows(got, want):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
+def _raw_rows(out_dir):
+    """Edge rows of ``out_dir/*.parquet`` read with pyarrow, which ignores
+    the sink's ``_spark_metadata`` log (as DuckDB and perfbench do)."""
+    import pyarrow.parquet as pq
+
+    tables = [pq.read_table(f) for f in glob.glob(f"{out_dir}/*.parquet")]
+    return sorted(
+        row for t in tables for row in zip(*(t.column(c).to_pylist() for c in EDGE_COLS))
+    )
+
+
+def _assert_raw_equals_spark(spark, out_dir):
+    spark_rows = sorted(map(tuple, spark.read.parquet(out_dir).select(EDGE_COLS).collect()))
+    assert _raw_rows(out_dir) == spark_rows
+
+
 @pytest.mark.parametrize("form", ["flat", "spans"])
 def test_incremental_kg_equals_batch(spark, tmp_path, batch_edges, form):
-    """Full incremental KG construction (extract+link+canonicalize per
-    micro-batch via foreachBatch) over two drops of flat documents or of
-    the ``(doc_id, spans)`` table equals the batch pipeline's edges. The
-    second drop restarts from the checkpoint: after drop 1 the stream
-    holds exactly the first half's edges, and the restart processes only
-    the new files (streaming resume)."""
+    """Full incremental KG construction (extract+link+canonicalize in the
+    streaming plan, written by the parquet file sink) over two drops of
+    flat documents or of the ``(doc_id, spans)`` table equals the batch
+    pipeline's edges. The second drop restarts from the checkpoint: after
+    drop 1 the stream holds exactly the first half's edges, and the
+    restart processes only the new files (streaming resume). After each
+    drop, the raw parquet files equal what Spark reads through the sink
+    log."""
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "edges_stream")
     ckpt = str(tmp_path / "ckpt")
@@ -48,10 +69,42 @@ def test_incremental_kg_equals_batch(spark, tmp_path, batch_edges, form):
         spark.read.parquet(out_dir),
         batch_edges.filter(F.col("doc_id") < "doc-0000250"),
     )
+    _assert_raw_equals_spark(spark, out_dir)
 
     docs.filter(~first).write.mode("append").parquet(in_dir)
     assert await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
     _assert_same_rows(spark.read.parquet(out_dir), batch_edges)
+    _assert_raw_equals_spark(spark, out_dir)
+
+
+def test_replayed_batch_is_written_once(spark, tmp_path, batch_edges):
+    """Replay drill: two drops, then the state a kill leaves between the
+    sink's commit and the offset commit — the last ``commits/<n>`` entry
+    of the checkpoint is gone, so the restart replays batch n. The sink
+    log already holds batch n, so its edges are not written again: Spark
+    readers and a raw count of ``out_dir/*.parquet`` both see the batch
+    edges of those documents exactly once."""
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "edges_stream")
+    ckpt = str(tmp_path / "ckpt")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    docs.filter(F.col("doc_id") < 125).write.parquet(in_dir)
+    assert await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
+    docs.filter(F.col("doc_id").between(125, 249)).write.mode("append").parquet(in_dir)
+    assert await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
+
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert await_then_stop(stream_kg_edges(spark, in_dir, out_dir, ckpt), 300)
+    assert os.path.exists(os.path.join(commits, str(last)))  # the replay ran
+
+    want = batch_edges.filter(F.col("doc_id") < "doc-0000250")
+    _assert_same_rows(spark.read.parquet(out_dir), want)
+    assert len(_raw_rows(out_dir)) == want.count()
 
 
 def test_stream_kg_edges_empty_in_dir_raises(spark, tmp_path):
@@ -61,6 +114,21 @@ def test_stream_kg_edges_empty_in_dir_raises(spark, tmp_path):
     in_dir.mkdir()
     with pytest.raises(ValueError, match=re.escape(str(in_dir))):
         stream_kg_edges(spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert not spark.streams.active
+
+
+def test_stream_kg_edges_refuses_unlogged_out_dir(spark, tmp_path):
+    """An ``out_dir`` with parquet files but no ``_spark_metadata`` log
+    (what an append sink leaves) fails before any query starts, naming
+    the directory: the file sink's log would hide those files from Spark
+    readers."""
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    docs.limit(5).write.parquet(in_dir)
+    spark.createDataFrame([(1, "p", 2, "doc-0000001", 0)], EDGE_COLS).write.parquet(out_dir)
+    with pytest.raises(ValueError, match=re.escape(out_dir)):
+        stream_kg_edges(spark, in_dir, out_dir, str(tmp_path / "ckpt"))
     assert not spark.streams.active
 
 
