@@ -20,11 +20,13 @@ large-component capping"):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kg.ids import id64
-from kg.session import local_frame
+from kg.session import local_frame, session_cached
 from kg.vocab import alias_pairs
 
 
@@ -35,17 +37,12 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
     max_component: int | None = None,
-    n_partitions: int | None = None,
     driver_fastpath_edges: int | None = DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
     """(src:string, dst:string) undirected edges -> (node, label).
 
     ``label`` = min id64 over the node's component. Pure driver-side loop
     over stock operators (Catalyst can't express iteration; SURVEY §4.3).
-
-    ``n_partitions`` sizes every shuffle in the loop: pass a small number
-    for small graphs (avoids scheduling hundreds of empty tasks per
-    iteration) and scale it with edge count on a cluster.
 
     Small-graph fast path: when the edge list fits comfortably on the
     driver (``count <= driver_fastpath_edges``), the iterative job loop
@@ -67,8 +64,6 @@ def connected_components(
             return _driver_cc(
                 edges.sparkSession, [(r.a, r.b) for r in sample], max_component
             )
-    if n_partitions:
-        sym = sym.repartition(n_partitions, "a")
     nodes = (
         sym.select(F.col("a").alias("node"))
         .unionByName(sym.select(F.col("b").alias("node")))
@@ -77,9 +72,6 @@ def connected_components(
     labels = nodes.withColumn("label", id64(F.col("node"))).localCheckpoint()
     sym = sym.localCheckpoint()
 
-    if n_partitions:
-        labels = labels.repartition(n_partitions, "node")
-
     changed = 0
     for _ in range(max_iter):
         neighbor_min = (
@@ -87,8 +79,6 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("nb_label"))
         )
-        if n_partitions:
-            neighbor_min = neighbor_min.repartition(n_partitions, "node")
         new_labels = (
             labels.join(neighbor_min, "node", "left")
             .select(
@@ -173,12 +163,6 @@ def _driver_cc(
     )
 
 
-# keyed by max_component: the rows derive ONLY from the static alias
-# dictionary + that cap — session-independent, so no id(spark) key that a
-# GC'd session's reused address could poison (round-3 ADVICE item 3)
-_CANON_CACHE: dict[int | None, list] = {}
-
-
 def surface_similarity_edges(
     surfaces: DataFrame,
     max_distance: int = 2,
@@ -239,12 +223,31 @@ def surface_similarity_edges(
     )
 
 
-def canonical_map(spark: SparkSession, max_component: int | None = 1000) -> DataFrame:
-    """(surface, canonical_id, canonical_name) over the alias graph.
+@functools.cache
+def dictionary_rows() -> tuple[tuple[str, int, str], ...]:
+    """(surface, canonical_id, canonical_name) over the alias graph, one
+    row per dictionary surface, sorted: the driver union-find closure of
+    the static alias dictionary, computed once per process. Every
+    dictionary-mode frame and literal map derives from these rows.
 
     Canonical name = the component member whose id64 equals the component
     label (i.e. argmin id64). Surfaces with no alias edges are their own
-    canonical entity.
+    canonical entity."""
+    from kg.ids import py_id64
+
+    sym = [(s, t) for s, t in alias_pairs() if s != t]
+    labels = dict(_driver_cc_rows(sym + [(t, s) for s, t in sym], None))
+    by_id = {py_id64(n): n for n in labels}
+    rows = []
+    for surface, _ in alias_pairs():
+        name = by_id[labels[surface]] if surface in labels else surface
+        rows.append((surface, py_id64("ent:" + name), name))
+    return tuple(sorted(rows))
+
+
+def canonical_map(spark: SparkSession) -> DataFrame:
+    """(surface, canonical_id, canonical_name) — :func:`dictionary_rows`
+    as a JVM-local relation, memoized per session.
 
     The map depends only on the alias dictionary (not the corpus) and is
     dictionary-sized by definition — so this is exactly the driver fast
@@ -254,77 +257,36 @@ def canonical_map(spark: SparkSession, max_component: int | None = 1000) -> Data
     is the corpus-scale path — see :func:`canonical_map_from_corpus` and
     the distributed-vs-driver equality tests in tests/test_canonicalize.py.
     """
-    key = max_component
-    if key not in _CANON_CACHE:
-        _CANON_CACHE[key] = _canonical_map_rows(max_component)
-    # per-session DataFrame memo on top of the row memo: the map is static
-    # dictionary state, so one JVM-local relation serves every query
-    # (guide §4.5). The cost to avoid was never the frame's creation but
-    # the Python tasks that scan a list-built frame; local_frame has none
-    cache = getattr(spark, "_kg_canon_map_df", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._kg_canon_map_df = cache
-        except AttributeError:
-            pass
-    if key not in cache:
-        cache[key] = local_frame(
+    return session_cached(
+        spark,
+        "canonical_map",
+        lambda: local_frame(
             spark,
-            _CANON_CACHE[key],
+            dictionary_rows(),
             "surface string, canonical_id long, canonical_name string",
-        )
-    return cache[key]
+        ),
+    )
 
 
-def _canonical_map_rows(max_component: int | None) -> list[tuple[str, int, str]]:
-    from kg.ids import py_id64
-
-    sym = [(s, t) for s, t in alias_pairs() if s != t]
-    labels = dict(_driver_cc_rows(sym + [(t, s) for s, t in sym], max_component))
-    by_id = {py_id64(n): n for n in labels}
-    rows = []
-    for surface, _ in alias_pairs():
-        label = labels.get(surface, py_id64(surface))
-        name = by_id.get(label, surface) if surface in labels else surface
-        rows.append((surface, py_id64("ent:" + name), name))
-    return sorted(rows)
+def canonical_concept_rows() -> list[tuple[int, str]]:
+    """Distinct (entity_id, name) concept rows of :func:`dictionary_rows`:
+    the concepts frame and the literal name map in kg.queries."""
+    return sorted({(cid, name) for _s, cid, name in dictionary_rows()})
 
 
-def canonical_concept_rows(
-    max_component: int | None = 1000,
-) -> list[tuple[int, str]]:
-    """Distinct (entity_id, name) concept rows of the dictionary
-    canonical map, computed and memoized driver-side (static
-    vocabulary — no Spark job). Shared by :func:`canonical_concepts`
-    and the literal name-map lookup in kg.queries."""
-    if max_component not in _CANON_CACHE:
-        _CANON_CACHE[max_component] = _canonical_map_rows(max_component)
-    return sorted({(cid, name) for _s, cid, name in _CANON_CACHE[max_component]})
-
-
-def canonical_concepts(
-    spark: SparkSession, max_component: int | None = 1000
-) -> DataFrame:
+def canonical_concepts(spark: SparkSession) -> DataFrame:
     """Distinct (entity_id, name, kind='concept') node rows of the
-    dictionary canonical map, deduplicated driver-side (static
-    vocabulary, no Spark job) into a JVM-local relation, memoized per
+    dictionary canonical map as a JVM-local relation, memoized per
     session like :func:`canonical_map`."""
-    cache = getattr(spark, "_kg_concepts_df", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._kg_concepts_df = cache
-        except AttributeError:
-            pass
-    if max_component not in cache:
-        rows = canonical_concept_rows(max_component)
-        cache[max_component] = local_frame(
+    return session_cached(
+        spark,
+        "canonical_concepts",
+        lambda: local_frame(
             spark,
-            [(cid, name, "concept") for cid, name in rows],
+            [(cid, name, "concept") for cid, name in canonical_concept_rows()],
             "entity_id long, name string, kind string",
-        )
-    return cache[max_component]
+        ),
+    )
 
 
 def canonical_map_from_corpus(

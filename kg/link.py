@@ -26,11 +26,13 @@ surface" operation — re-expressed as joins (SURVEY §2.6 J2).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg.ids import id64, spark_sql_id64
-from kg.session import local_frame
+from kg.session import local_frame, session_cached
 from kg.vocab import ENTITY_KIND, alias_pairs
 
 
@@ -41,16 +43,13 @@ def alias_dict(spark: SparkSession) -> DataFrame:
     session: the dictionary is static vocabulary (kg.vocab), so one frame
     serves every query (guide §4.5 — heavyweight init once).
     """
-    cached = getattr(spark, "_kg_alias_dict_df", None)
-    if cached is not None:
-        return cached
-    df = local_frame(spark, list(alias_pairs()), "surface string, target string")
-    df = df.withColumn("target_id", id64(F.concat(F.lit("ent:"), F.col("target"))))
-    try:
-        spark._kg_alias_dict_df = df
-    except AttributeError:  # exotic session proxies: just skip the memo
-        pass
-    return df
+    return session_cached(
+        spark,
+        "alias_dict",
+        lambda: local_frame(
+            spark, list(alias_pairs()), "surface string, target string"
+        ).withColumn("target_id", id64(F.concat(F.lit("ent:"), F.col("target")))),
+    )
 
 
 def _composed_link_rows() -> list[tuple[str, int]]:
@@ -67,10 +66,10 @@ def _composed_link_rows() -> list[tuple[str, int]]:
     dictionaries and collapses stage 2+3 into ONE map — asserted equal
     to the two-stage chain in tests/test_link.py.
     """
-    from kg.canonicalize import _canonical_map_rows
+    from kg.canonicalize import dictionary_rows
     from kg.ids import py_id64
 
-    ent_map = {py_id64("ent:" + s): cid for s, cid, _ in _canonical_map_rows(1000)}
+    ent_map = {py_id64("ent:" + s): cid for s, cid, _ in dictionary_rows()}
     rows = []
     for s, t in alias_pairs():
         tid = py_id64("ent:" + t)
@@ -83,26 +82,32 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def composed_link_expr(rows: list[tuple[str, int]]) -> str:
-    """The composed ``(surface, final_id)`` rows as a LITERAL map, in
-    Spark SQL.
+def _sql_lit(v: str | int) -> str:
+    """A str as a Spark SQL string literal, an int as a bigint one."""
+    return _sql_str(v) if isinstance(v, str) else f"{v}L"
 
-    The map is static vocabulary config (19 entries), so the lookup is a
+
+def composed_link_expr(rows: Sequence[tuple[str | int, str | int]]) -> str:
+    """``(key, value)`` rows as a LITERAL map, in Spark SQL: the composed
+    ``(surface, final_id)`` link rows, or the ``(entity_id, name)``
+    concept name map of kg.queries.q_top_entities.
+
+    The map is static vocabulary config (~20 entries), so the lookup is a
     constant-folded expression in the same codegen stage as the
     extraction output: no broadcast exchange, no join operator, no
     per-query broadcast-build latency (guide §3 — broadcast the side
     that fits; a side that is literal config folds away entirely).
     Misses read as null, which needs Spark >= 3.4 under ANSI mode (older
-    versions raise MAP_KEY_DOES_NOT_EXIST). A surface that two rows
-    share raises ``ValueError`` here: under the default
+    versions raise MAP_KEY_DOES_NOT_EXIST). A key that two rows share
+    raises ``ValueError`` here: under the default
     ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` the map would otherwise
     fail mid-query."""
-    seen: set[str] = set()
-    for s, _ in rows:
-        if s in seen:
-            raise ValueError(f"composed_link_expr: duplicate surface {s!r}")
-        seen.add(s)
-    return "map(" + ", ".join(f"{_sql_str(s)}, {fid}L" for s, fid in rows) + ")"
+    seen: set[str | int] = set()
+    for k, _ in rows:
+        if k in seen:
+            raise ValueError(f"composed_link_expr: duplicate key {k!r}")
+        seen.add(k)
+    return "map(" + ", ".join(f"{_sql_lit(k)}, {_sql_lit(v)}" for k, v in rows) + ")"
 
 
 EDGE_COLS = ("subj_id", "pred", "obj_id", "doc_id", "offset")
@@ -143,17 +148,13 @@ def _dict_link_columns(spark: SparkSession) -> dict[str, Column]:
     (batch build, each stream start) selects the same Columns. A
     ``selectExpr`` re-parses the strings on every call, which was half
     the ~17 ms it took to plan the projection on a stream."""
-    cached = getattr(spark, "_kg_link_columns", None)
-    if cached is not None:
-        return cached
-    m = composed_link_expr(_composed_link_rows())
-    proj = _link_projection(f"{m}[`subj_surface`]", f"{m}[`obj_surface`]")
-    cols = {name: F.expr(e).alias(name) for name, e in proj.items()}
-    try:
-        spark._kg_link_columns = cols
-    except AttributeError:  # exotic session proxies: just skip the memo
-        pass
-    return cols
+
+    def build() -> dict[str, Column]:
+        m = composed_link_expr(_composed_link_rows())
+        proj = _link_projection(f"{m}[`subj_surface`]", f"{m}[`obj_surface`]")
+        return {name: F.expr(e).alias(name) for name, e in proj.items()}
+
+    return session_cached(spark, "link_columns", build)
 
 
 def _link_via(triples_surface: DataFrame, lookup: DataFrame) -> DataFrame:

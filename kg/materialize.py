@@ -66,10 +66,6 @@ def with_bucket(edges: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def edges_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "edges")
-
-
 def nodes_path(out_dir: str) -> str:
     return os.path.join(out_dir, "nodes")
 
@@ -278,10 +274,10 @@ def build_nodes_from_edges(
     ``groupBy("entity_id")`` then takes ``max(name)``, ``max(kind)`` and
     ``sum(w)`` (the mention count; 0 for a concept no edge names). Rows
     without a kind are provisional ``ent:<surface>`` entities, which are
-    not nodes. ``concepts`` is an (entity_id, name, kind) frame —
-    dictionary mode passes kg.canonicalize.canonical_concepts; otherwise
-    the concepts come from ``canon`` and the aggregate removes their
-    duplicates.
+    not nodes. The concepts come from ``canon`` (one row per surface;
+    the aggregate removes their duplicates) unless ``concepts``, an
+    (entity_id, name, kind) frame such as
+    kg.canonicalize.canonical_concepts, is given.
     """
     if concepts is None:
         concepts = canon.select(

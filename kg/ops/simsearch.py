@@ -102,7 +102,7 @@ def ivf_dials(n_vectors: int) -> tuple[int, int]:
 
 # per-session cache of (sf_dir -> (bound, {vec_id: [floats]})) for the
 # bounded driver-side vectors (query + IVF centroids); dictionary-sized
-# like kg.canonicalize._CANON_CACHE. `bound` is the highest vec_id
+# like kg.canonicalize.dictionary_rows. `bound` is the highest vec_id
 # collected so far — a request past it re-collects with the wider filter.
 # Keyed on applicationId, not id(spark): a GC'd session's address can be
 # reused by a new session and would silently serve stale vectors

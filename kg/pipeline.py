@@ -26,11 +26,7 @@ if __package__ in (None, ""):  # `python kg/pipeline.py` (no spark-submit --py-f
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg.canonicalize import (
-    canonical_concepts,
-    canonical_map,
-    canonical_map_from_corpus,
-)
+from kg.canonicalize import canonical_map, canonical_map_from_corpus
 from kg.fused import fused_extract_triples
 from kg.link import link_canonicalize_triples
 from kg.materialize import (
@@ -148,12 +144,9 @@ def run_pipeline(
     # nodes come from the materialized edges table — reusing disk instead
     # of recomputing the extraction DAG or caching it in-heap
     edges_final = spark.read.parquet(f"{out_dir}/edges")
-    if canon is None:
-        nodes = build_nodes_from_edges(
-            canonical_map(spark), edges_final, concepts=canonical_concepts(spark)
-        )
-    else:
-        nodes = build_nodes_from_edges(canon, edges_final)
+    nodes = build_nodes_from_edges(
+        canonical_map(spark) if canon is None else canon, edges_final
+    )
     n_nodes = materialize_nodes(spark, nodes, out_dir, run_id=run_id, lineage=lineage)
     # footer metadata count — the table was just written and counted
     # group-by-group; a distributed count job re-reads nothing new

@@ -13,9 +13,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg.canonicalize import canonical_concept_rows, canonical_concepts, canonical_map
+from kg.canonicalize import canonical_concept_rows, canonical_map
 from kg.fused import fused_extract_triples
-from kg.link import alias_dict, link_canonicalize_edges, link_triples
+from kg.link import alias_dict, composed_link_expr, link_canonicalize_edges, link_triples
 from kg.materialize import build_nodes_from_edges
 from kg.normalize import clean_spans
 from kg.schemas import SPANS_NORM
@@ -59,9 +59,7 @@ def q_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return build_nodes_from_edges(
-        canonical_map(spark), q_edges(spark, sf_dir), concepts=canonical_concepts(spark)
-    )
+    return build_nodes_from_edges(canonical_map(spark), q_edges(spark, sf_dir))
 
 
 def q_top_entities(spark: SparkSession, sf_dir: str, limit: int = 20) -> DataFrame:
@@ -78,12 +76,10 @@ def q_top_entities(spark: SparkSession, sf_dir: str, limit: int = 20) -> DataFra
     )
     # literal name map over the static concept rows (deduped driver-side):
     # the inner join against the concepts frame becomes a constant-folded
-    # lookup + null filter — no broadcast exchange, no join stage (same
-    # move as kg.link.composed_link_expr; equal keys are unique, so
-    # lookup-and-filter is exactly the unique-key inner join)
-    name_map = F.create_map(
-        *[part for cid, nm in canonical_concept_rows() for part in (F.lit(cid), F.lit(nm))]
-    )
+    # lookup + null filter — no broadcast exchange, no join stage; equal
+    # keys are unique, so lookup-and-filter is exactly the unique-key
+    # inner join
+    name_map = F.expr(composed_link_expr(canonical_concept_rows()))
     named = cnt.select(
         name_map[F.col("entity_id")].alias("name"), "n_mentions"
     ).filter(F.col("name").isNotNull())

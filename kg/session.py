@@ -11,8 +11,11 @@ with executor parallelism, so all tuning lives here.
 from __future__ import annotations
 
 import os
+from typing import Callable, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def spread_partitions(spark: SparkSession) -> int:
@@ -55,7 +58,7 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
     """Driver-side constant rows (dictionary maps, a validation report)
     as a JVM-local relation: the rows go through a pandas frame and
     Arrow (on in :func:`get_spark`) and plan as ``LocalTableScan``.
@@ -68,6 +71,22 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
 
     names = [field.split()[0] for field in schema.split(",")]
     return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), schema)
+
+
+def session_cached(spark: SparkSession, name: str, build: Callable[[], T]) -> T:
+    """``build()`` memoized on ``spark`` under ``name``: static
+    dictionary state (a local frame, parsed Columns) is built once per
+    session and every query reuses it. A session object that takes no
+    attributes (an exotic proxy) rebuilds on each call."""
+    attr = "_kg_" + name
+    cached = getattr(spark, attr, None)
+    if cached is None:
+        cached = build()
+        try:
+            setattr(spark, attr, cached)
+        except AttributeError:
+            pass
+    return cached
 
 
 def get_spark(

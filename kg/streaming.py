@@ -1,5 +1,5 @@
-"""Structured Streaming surface: incremental document ingest + windowed
-event aggregation.
+"""Structured Streaming surface: incremental document ingest + stateful
+stream operators.
 
 The reference has no stream processing (SURVEY §2.9) — its closest analogs
 are the point/batch insert API (``api/main.py:247-325``) and the rolling
@@ -15,9 +15,11 @@ latency window (``api/main.py:66-77``). Spark-first upgrades:
   the output exactly-once for Spark readers, replayed batches included —
   the streaming twin of the batch manifest. Nodes are built in batch
   only.
-* :func:`windowed_event_counts` — event-time tumbling window with a
-  watermark for late data over the events stream (reference's rolling
-  mean, done properly with event time instead of arrival order).
+* :func:`stateful_dedup_stream` and :func:`stream_rate_limit` —
+  ``applyInPandasWithState`` operators whose state expires by event-time
+  timeouts on an arrival clock, so ``availableNow`` runs terminate.
+* windowed event aggregation (tumbling, sliding, session windows) as
+  batch queries over the events table; each has a DuckDB oracle.
 
 Batch semantics equality is tested by feeding the corpus through the
 stream (Trigger.AvailableNow) in two drops and comparing with the batch
@@ -94,18 +96,22 @@ def stream_kg_edges(
 
 
 def _document_stream(spark: SparkSession, in_dir: str) -> DataFrame:
-    """File-source stream over ``in_dir`` with the schema of its parquet
-    footers. pyarrow reads the footer driver-side with no Spark job
-    (``spark.read.parquet(in_dir).schema`` runs a job per call, ~100 ms
-    at 4 local cores, and the stream is restarted per drop). pyarrow
-    returns an empty schema for an empty directory instead of raising,
-    hence the check."""
-    import pyarrow.dataset as ds
+    """File-source stream over ``in_dir`` with the schema of one of its
+    parquet files. pyarrow reads that one footer driver-side with no
+    Spark job (``spark.read.parquet(in_dir).schema`` runs a job per call,
+    ~100 ms at 4 local cores, and the stream is restarted per drop) and
+    without listing a dataset over every file already dropped. Names
+    starting with ``_`` or ``.`` are skipped, as pyarrow and Spark skip
+    them (``_SUCCESS``, ``.crc`` files)."""
+    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = ds.dataset(in_dir, format="parquet").schema
-    if not schema.names:
+    first = min(
+        (n for n in os.listdir(in_dir) if not n.startswith(("_", "."))), default=None
+    )
+    if first is None:
         raise ValueError(f"stream_kg_edges: no parquet files in {in_dir!r}")
+    schema = pq.read_schema(os.path.join(in_dir, first))
     return spark.readStream.schema(from_arrow_schema(schema)).parquet(in_dir)
 
 
@@ -284,32 +290,9 @@ def stream_rate_limit(
     )
 
 
-def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
-    """10-minute tumbling event-time windows with a 20-minute watermark:
-    (window, event_type, n, total_value). Late events beyond the watermark
-    are dropped — the at-scale answer to unbounded state."""
-    return (
-        events_stream.withWatermark("ts", "20 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias(
-                "total_value"
-            ),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
 def windowed_event_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming aggregation (same plan minus watermark)
-    — this is what the driver's DuckDB oracle checks."""
+    """10-minute tumbling event-time windows over the events table:
+    (win_start, win_end, event_type, n, total_value)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
@@ -398,7 +381,7 @@ FROM ({sessionize_sql()})"""
 def sliding_event_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (width 10 min, slide 5 min — every
     event lands in exactly TWO overlapping windows), the windowing shape
-    the tumbling twin (:func:`windowed_event_counts_batch`) does not
+    the tumbling query (:func:`windowed_event_counts_batch`) does not
     cover: (win_start, win_end, event_type, n, total_value). Native
     ``F.window(ts, width, slide)`` — in a stream the same aggregate runs
     under a watermark exactly like the tumbling form (Spark expands each

@@ -25,7 +25,6 @@ def test_chain_converges_to_min_id(spark, fastpath):
         spark,
         [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")],
         driver_fastpath_edges=fastpath,
-        n_partitions=1,
     )
     comp1 = min(py_id64(n) for n in "abcd")
     comp2 = min(py_id64(n) for n in "xy")
@@ -37,9 +36,7 @@ def test_chain_converges_to_min_id(spark, fastpath):
 def test_large_component_capping(spark, fastpath):
     # star of 5 nodes capped at 3 -> all revert to singleton labels
     pairs = [("hub", f"n{i}") for i in range(4)]
-    got = _cc(
-        spark, pairs, max_component=3, driver_fastpath_edges=fastpath, n_partitions=1
-    )
+    got = _cc(spark, pairs, max_component=3, driver_fastpath_edges=fastpath)
     nodes = ["hub"] + [f"n{i}" for i in range(4)]
     assert all(got[n] == py_id64(n) for n in nodes)
 
@@ -99,3 +96,15 @@ def test_canonical_concepts_equals_distinct_derivation(spark):
     assert literal.columns == derived.columns
     assert literal.exceptAll(derived).count() == 0
     assert derived.exceptAll(literal).count() == 0
+
+
+def test_dictionary_state_is_built_once(spark):
+    """The dictionary frames and parsed link Columns are memoized per
+    session, and the closure rows under them once per process."""
+    from kg.canonicalize import canonical_concepts, dictionary_rows
+    from kg.link import _dict_link_columns, alias_dict
+
+    for make in (canonical_map, canonical_concepts, alias_dict, _dict_link_columns):
+        assert make(spark) is make(spark), make.__name__
+    assert dictionary_rows() is dictionary_rows()
+    assert dictionary_rows.cache_info().misses == 1

@@ -153,10 +153,15 @@ def test_corpus_map_link_equals_two_stage(spark):
 
 
 def test_composed_link_expr_rejects_duplicate_surface(spark):
-    """Two composed rows with one surface fail when the map is built,
-    naming the surface, instead of mid-query in ``create_map``; quotes
-    and backslashes in a surface survive Spark's SQL parser."""
+    """Two rows with one key fail when the map is built, naming the key,
+    instead of mid-query in ``map``; quotes and backslashes in a surface
+    or a name survive Spark's SQL parser."""
     with pytest.raises(ValueError, match="'data'"):
         composed_link_expr([("data", 1), ("model", 2), ("data", 3)])
     rows = [("it's", 7), ("a\\b", 8)]
     assert spark.range(1).selectExpr(f"{composed_link_expr(rows)} AS m").first().m == dict(rows)
+    # bigint keys, string values: the concept name map of q_top_entities
+    with pytest.raises(ValueError, match="duplicate key 7"):
+        composed_link_expr([(7, "a"), (8, "b"), (7, "c")])
+    names = [(7, "it's"), (1 << 59, "a\\b")]
+    assert spark.range(1).selectExpr(f"{composed_link_expr(names)} AS m").first().m == dict(names)

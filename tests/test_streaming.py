@@ -107,11 +107,14 @@ def test_replayed_batch_is_written_once(spark, tmp_path, batch_edges):
     assert len(_raw_rows(out_dir)) == want.count()
 
 
-def test_stream_kg_edges_empty_in_dir_raises(spark, tmp_path):
-    """No files means no schema: the stream fails before any query
-    starts, naming the directory."""
+@pytest.mark.parametrize("files", [[], ["_SUCCESS"]], ids=["empty", "success_only"])
+def test_stream_kg_edges_empty_in_dir_raises(spark, tmp_path, files):
+    """No data files means no schema: the stream fails before any query
+    starts, naming the directory. A ``_SUCCESS`` marker is not data."""
     in_dir = tmp_path / "in"
     in_dir.mkdir()
+    for name in files:
+        (in_dir / name).touch()
     with pytest.raises(ValueError, match=re.escape(str(in_dir))):
         stream_kg_edges(spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"))
     assert not spark.streams.active
